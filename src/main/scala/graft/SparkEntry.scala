@@ -100,6 +100,7 @@ object SparkEntry {
 
   /** Entries whose BUILDER is eager — it runs driver-side Spark jobs
     * before returning the DataFrame (model fits, checkpointed folds,
+    * eagerly checkpointing operators such as Dedup's pair verifiers,
     * real micro-batch streams), so deriving just their output schema
     * costs 0.5-10 s each instead of analysis-only milliseconds.
     * HarnessGateSpec's scalar-only schema gate skips EXECUTING these
@@ -115,6 +116,7 @@ object SparkEntry {
     "d8_simhash_pairs", "d15_tfidf", "d17_dup_clusters", "d18_pack_sequences",
     "d21_decontaminate_bloom", "d23_vocab_encode", "d27_dedup_incremental",
     "d32_shuffle_shard", "d33_cluster_survivors", "d34_curriculum_shard",
+    "d36_containment_pairs",
     "d37_jaccard_verified", "d39_edit_distance", "d40_curation_pipeline",
     "d41_lm_perplexity", "d42_heavy_hitters", "d45_bigram_lm",
     "d47_token_budget", "d53_sketch_quality", "d54_bm25", "d55_chunk_neardup",

@@ -228,7 +228,14 @@ object Dedup {
     * on both join build sides — at 100 TB that is two full shingle passes
     * to verify a handful of pairs). Candidates are persisted because the
     * id-set derivation and the verify join both read them; the relation is
-    * pair-count-sized. */
+    * pair-count-sized.
+    *
+    * EAGER: the call runs Spark jobs and returns a locally checkpointed
+    * frame (the candidate and shingle caches are released before it
+    * returns). A caller's later filter or projection therefore does not
+    * push into the pair join, and the checkpointed blocks are not
+    * replicated, so the result cannot be recomputed after an executor is
+    * lost. */
   def ngramJaccardPairs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -263,7 +270,11 @@ object Dedup {
     * wide enough to see disagreement in BOTH directions around the real
     * dedup threshold. Same scale shape as [[ngramJaccardPairs]]: shingle
     * arrays materialize only for colliding pairs (semi-join before
-    * shingling). */
+    * shingling).
+    *
+    * EAGER: the call runs Spark jobs and returns a locally checkpointed
+    * frame, so later filters do not push into the pair join (tradeoffs as
+    * in [[ngramJaccardPairs]]). */
   def sketchQualityPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", shingleN: Int = 3,
       estFloor: Double = 0.1): DataFrame = {
@@ -302,7 +313,11 @@ object Dedup {
     * shingles. Exclusion costs recall only for pairs whose ENTIRE overlap
     * is hot boilerplate shingles; the containment values themselves are
     * computed on the full shingle arrays, joined in only for candidates.
-    * Shuffles carry 8-byte hashes + ids until that final verify join. */
+    * Shuffles carry 8-byte hashes + ids until that final verify join.
+    *
+    * EAGER: the call runs Spark jobs and returns a locally checkpointed
+    * frame, so later filters do not push into the pair join (tradeoffs as
+    * in [[ngramJaccardPairs]]). */
   def containmentPairs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 3, threshold: Double = 0.5, maxDf: Int = 1000): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
