@@ -16,7 +16,10 @@ sealed trait ReaderSpec
 object ReaderSpec {
   /** One record per line (reference: reader/TextLogFileReader.java).
     * `numMessagesPerLogMessage` > 1 packs that many consecutive lines into
-    * one message (reference: TextLogFileReader.java:161-189). */
+    * one message (reference: TextLogFileReader.java:161-189).
+    * `trimTailingNewline` changes nothing: every line reader (Spark's text
+    * source, the graft-tail text reader, the packer) already splits at
+    * `\n` and drops it, so the pipeline runs no newline trim. */
   case class TextLine(
       filterRegex: Option[String] = None,
       prependTimestamp: Boolean = false,

@@ -16,10 +16,13 @@ package graft.operators
   * job) that dominates these gates at test scale and any many-small-epoch
   * maintenance window at production scale.
   *
-  * WITHIN one store the steps stay sequential — epoch writes publish a
-  * per-store write-intent marker and first-epoch metadata creation
-  * (`_NBUCKETS`) is exclusive-create — so callers pass one thunk per
-  * store, never two thunks touching the same root.
+  * Contract: epoch writes to DISJOINT epochs of one store root may run
+  * concurrently once that store's metadata exists — each writes its own
+  * `epoch=N` directory under its own write-intent marker (UUID-named), so
+  * the SparkEntry gates fan out several epochs of one root this way.
+  * First-epoch seeding (the exclusive-create `_NBUCKETS` metadata) and
+  * maintenance ops (compact, refit, rebucket) are serialized: run them
+  * before or after the fan-out, never inside it.
   *
   * Failure surface matches the sequential form: every chain is joined,
   * the first failure rethrows (later ones ride as suppressed) — no

@@ -317,11 +317,12 @@ case class CenteredProjectExpr(child: Expression,
   * element_at(t, c + 1)), 0.0, acc + x)` — interpreted per element with
   * InternalRow boxing, paid once per (query, probed-cell candidate row),
   * the exact pattern CenteredProjectExpr killed one hop upstream (round
-  * 16). Semantics match it exactly: left-to-right accumulation from 0.0
-  * (bit-identical); a null element or a length mismatch (zip_with pads
-  * the shorter side with null, which null-propagates through the sum)
-  * yields null; an out-of-range code throws loudly (ANSI element_at's
-  * behavior). */
+  * 16). For in-range codes it is bit-identical: left-to-right
+  * accumulation from 0.0; a null element or a length mismatch (zip_with
+  * pads the shorter side with null, which null-propagates through the
+  * sum) yields null. An out-of-range code throws, as ANSI `element_at`
+  * does; under non-ANSI config the HOF form returns null there instead,
+  * so the two differ only on codes valid PQ never produces. */
 case class AdcSumExpr(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = DoubleType

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.ReaderSpec
 
@@ -50,20 +51,50 @@ object LogSources {
   /** One text record (single- or multi-line) with its source file. */
   case class TextLogRow(path: String, value: String)
 
+  /** The file listing every format reads through: `dir/glob` via Spark's
+    * batch reader, or via its streaming twin when `streaming` — the one
+    * place the two modes differ. Columns: the format's own, then `path`. */
+  private def files(spark: SparkSession, dir: String, glob: String, format: String,
+      options: Map[String, String], streaming: Boolean, maxFilesPerTrigger: Option[Int],
+      fileRegex: Option[String]): DataFrame = {
+    val df =
+      if (!streaming) spark.read.format(format).options(options).load(s"$dir/$glob")
+      else {
+        val r = spark.readStream.format(format).options(options)
+        maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
+        // the binaryFile source requires its schema stated in streaming mode
+        if (format == "binaryFile") r.schema(BinaryFileSchema)
+        r.load(s"$dir/$glob")
+      }
+    // binaryFile rows carry their own `path`; the text source's do not
+    filterName(if (df.columns.contains("path")) df
+      else df.withColumn("path", input_file_name()), fileRegex)
+  }
+
+  private val BinaryFileSchema = StructType(Seq(
+    StructField("path", StringType), StructField("modificationTime", TimestampType),
+    StructField("length", LongType), StructField("content", BinaryType)))
+
+  /** Whole files as (content, path) rows: one row per rotation-bounded file
+    * (the reference caps file size the same way via rotation). Streaming
+    * processes each file exactly once, so records assembled per file never
+    * straddle a trigger boundary. */
+  private def wholeTextFiles(spark: SparkSession, dir: String, glob: String,
+      streaming: Boolean, maxFilesPerTrigger: Option[Int],
+      fileRegex: Option[String]): Dataset[(String, String)] = {
+    import spark.implicits._
+    files(spark, dir, glob, "text", Map("wholetext" -> "true"), streaming,
+      maxFilesPerTrigger, fileRegex).as[(String, String)]
+  }
+
   // ------------------------------------------------------------ text: lines
 
-  /** Batch: one record per line. */
-  def textLines(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read.textFile(s"$dir/$glob").toDF("value")
-      .withColumn("path", input_file_name())
-
-  /** Streaming twin of [[textLines]]. */
-  def textLinesStream(spark: SparkSession, dir: String, glob: String = "*",
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.text(s"$dir/$glob").withColumn("path", input_file_name())
-  }
+  /** One record per line. Spark's line reader splits at the line end and
+    * leaves it out, so records carry no trailing `\n`. */
+  def textLines(spark: SparkSession, dir: String, glob: String = "*",
+      streaming: Boolean = false, maxFilesPerTrigger: Option[Int] = None,
+      fileRegex: Option[String] = None): DataFrame =
+    files(spark, dir, glob, "text", Map.empty, streaming, maxFilesPerTrigger, fileRegex)
 
   // -------------------------------------------------------- text: multiline
 
@@ -74,51 +105,35 @@ object LogSources {
     * `maxMessageChars` are truncated, not fatal
     * (reference: TextMessageReader.java:107-115). */
   def splitMultiline(content: String, startRegex: String,
-      maxMessageChars: Int): Iterator[String] = {
+      maxMessageChars: Int): Iterator[String] =
+    multilineRecords(content, startRegex, maxMessageChars).map(_._1)
+
+  /** [[splitMultiline]] with each record's end offset in `content`: where
+    * its successor starts, or the content's end — a truncated record still
+    * consumes its full extent. The one multiline splitter, shared by the
+    * file readers here and the graft-tail reader. */
+  def multilineRecords(content: String, startRegex: String,
+      maxMessageChars: Int): Iterator[(String, Int)] = {
     val m = java.util.regex.Pattern.compile(startRegex, java.util.regex.Pattern.MULTILINE)
       .matcher(content)
     val starts = Iterator.continually(if (m.find()) m.start() else -1)
       .takeWhile(_ >= 0).toArray
     starts.iterator.zipWithIndex.map { case (s, i) =>
       val end = if (i + 1 < starts.length) starts(i + 1) else content.length
-      val rec = content.substring(s, math.min(end, s + maxMessageChars))
-      rec.stripSuffix("\n")
+      (content.substring(s, math.min(end, s + maxMessageChars)).stripSuffix("\n"), end)
     }
   }
 
-  /** Batch: multi-line records assembled per file. `wholetext` keeps each
-    * file in one row — correct for rotation-bounded log files (the reference
-    * caps file size the same way via rotation). */
+  /** Multi-line records assembled per file. */
   def textMultiline(spark: SparkSession, dir: String, startRegex: String,
-      maxMessageChars: Int = 1 << 20, glob: String = "*",
-      fileRegex: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val files = filterName(
-      spark.read.option("wholetext", "true").textFile(s"$dir/$glob")
-        .withColumn("path", input_file_name()), fileRegex)
-      .as[(String, String)]
-    files.flatMap { case (content, path) =>
-      splitMultiline(content, startRegex, maxMessageChars).map(TextLogRow(path, _))
-    }.toDF()
-  }
-
-  /** Streaming twin of [[textMultiline]]. Multi-line assembly is safe in
-    * streaming precisely because of the rotation convention: a file is only
-    * listed once it exists, and each file is processed exactly once, so
-    * records never straddle a trigger boundary. */
-  def textMultilineStream(spark: SparkSession, dir: String, startRegex: String,
-      maxMessageChars: Int = 1 << 20, glob: String = "*",
+      maxMessageChars: Int = 1 << 20, glob: String = "*", streaming: Boolean = false,
       maxFilesPerTrigger: Option[Int] = None,
       fileRegex: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val r = spark.readStream.option("wholetext", "true")
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    val files = filterName(r.text(s"$dir/$glob")
-      .withColumn("path", input_file_name()), fileRegex)
-      .as[(String, String)]
-    files.flatMap { case (content, path) =>
-      splitMultiline(content, startRegex, maxMessageChars).map(TextLogRow(path, _))
-    }.toDF()
+    wholeTextFiles(spark, dir, glob, streaming, maxFilesPerTrigger, fileRegex)
+      .flatMap { case (content, path) =>
+        splitMultiline(content, startRegex, maxMessageChars).map(TextLogRow(path, _))
+      }.toDF()
   }
 
   /** Packed text lines: `n` consecutive lines per message, assembled per
@@ -131,37 +146,37 @@ object LogSources {
       maxFilesPerTrigger: Option[Int] = None,
       fileRegex: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val files =
-      if (streaming) {
-        val r = spark.readStream.option("wholetext", "true")
-        maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-        filterName(r.text(s"$dir/$glob").withColumn("path", input_file_name()), fileRegex)
-      } else
-        filterName(spark.read.option("wholetext", "true").textFile(s"$dir/$glob").toDF("value")
-          .withColumn("path", input_file_name()), fileRegex)
     val n = spec.numMessagesPerLogMessage
     val filter = spec.filterRegex
     val (prependTs, prependHost, delim) =
       (spec.prependTimestamp, spec.prependHostname, spec.prependDelimiter)
-    files.as[(String, String)].flatMap { case (content, path) =>
-      val lines = content.split("\n", -1)
-      val trimmed = if (lines.nonEmpty && lines.last.isEmpty) lines.dropRight(1) else lines
-      val prefix: String => String = m => {
-        val sb = new StringBuilder
-        if (prependTs) { sb.append(System.currentTimeMillis()); sb.append(delim) }
-        if (prependHost) { sb.append(hostname); sb.append(delim) }
-        sb.append(m); sb.toString
-      }
-      graft.operators.Transforms.packLines(trimmed.iterator, n, filter, prefix)
-        .map(TextLogRow(path, _))
-    }.toDF()
+    wholeTextFiles(spark, dir, glob, streaming, maxFilesPerTrigger, fileRegex)
+      .flatMap { case (content, path) =>
+        val lines = content.split("\n", -1)
+        val trimmed = if (lines.nonEmpty && lines.last.isEmpty) lines.dropRight(1) else lines
+        val prefix: String => String = m => {
+          val sb = new StringBuilder
+          if (prependTs) { sb.append(System.currentTimeMillis()); sb.append(delim) }
+          if (prependHost) { sb.append(hostname); sb.append(delim) }
+          sb.append(m); sb.toString
+        }
+        graft.operators.Transforms.packLines(trimmed.iterator, n, filter, prefix)
+          .map(TextLogRow(path, _))
+      }.toDF()
   }
 
   // ------------------------------------------------------------------ thrift
 
-  private def decodeThriftFiles(df: DataFrame, maxMessageBytes: Int): DataFrame = {
-    import df.sparkSession.implicits._
-    df.select(col("path"), col("content"))
+  /** Framed-thrift LogMessage files (reference: reader/ThriftLogFileReader.java),
+    * decoded by [[ThriftLogCodec.decodeFrames]] — the same frame loop, and so
+    * the same oversize drop, as the graft-tail reader. */
+  def thriftFramed(spark: SparkSession, dir: String,
+      maxMessageBytes: Int = 1 << 20, glob: String = "*", streaming: Boolean = false,
+      maxFilesPerTrigger: Option[Int] = None,
+      fileRegex: Option[String] = None): DataFrame = {
+    import spark.implicits._
+    files(spark, dir, glob, "binaryFile", Map.empty, streaming, maxFilesPerTrigger, fileRegex)
+      .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
         ThriftLogCodec.decodeFrames(bytes, 0L, maxMessageBytes).map { d =>
@@ -171,31 +186,6 @@ object LogSources {
             d.nextByteOffset)
         }
       }.toDF()
-  }
-
-  /** Batch: framed-thrift LogMessage files
-    * (reference: reader/ThriftLogFileReader.java). */
-  def thriftFramed(spark: SparkSession, dir: String,
-      maxMessageBytes: Int = 1 << 20, glob: String = "*",
-      fileRegex: Option[String] = None): DataFrame =
-    decodeThriftFiles(filterName(
-      spark.read.format("binaryFile").load(s"$dir/$glob"), fileRegex), maxMessageBytes)
-
-  /** Streaming twin of [[thriftFramed]]. The binaryFile source requires its
-    * schema stated explicitly in streaming mode. */
-  def thriftFramedStream(spark: SparkSession, dir: String,
-      maxMessageBytes: Int = 1 << 20, glob: String = "*",
-      maxFilesPerTrigger: Option[Int] = None,
-      fileRegex: Option[String] = None): DataFrame = {
-    val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val r = spark.readStream.format("binaryFile").schema(binaryFileSchema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    decodeThriftFiles(filterName(r.load(s"$dir/$glob"), fileRegex), maxMessageBytes)
   }
 
   /** Source per config spec, batch or streaming. `tailMode` streams with
@@ -225,25 +215,22 @@ object LogSources {
         tail("multiline").option("messageStartRegex", re)
           .option("maxMessageChars", maxChars.toString).load()
           .select(col("value").cast("string").as("value"), col("path"))
-      case ReaderSpec.ThriftFramed(_) if streaming && tailMode =>
-        tail("thrift").load()
+      case ReaderSpec.ThriftFramed(maxBytes) if streaming && tailMode =>
+        tail("thrift").option("maxMessageBytes", maxBytes.toString).load()
           .select(col("path"), col("key"), col("value"), col("timestampNanos"),
             col("checksum"), col("byteOffset").as("nextByteOffset"))
-      case tl: ReaderSpec.TextLine if tl.numMessagesPerLogMessage > 1 =>
-        textLinesPacked(spark, dir, tl, hostname, streaming = streaming,
+      case tl: ReaderSpec.TextLine =>
+        if (tl.numMessagesPerLogMessage > 1)
+          textLinesPacked(spark, dir, tl, hostname, streaming = streaming,
+            maxFilesPerTrigger = maxFilesPerTrigger, fileRegex = fre)
+        else textLines(spark, dir, streaming = streaming,
           maxFilesPerTrigger = maxFilesPerTrigger, fileRegex = fre)
-      case _: ReaderSpec.TextLine =>
-        filterName(
-          if (streaming) textLinesStream(spark, dir, maxFilesPerTrigger = maxFilesPerTrigger)
-          else textLines(spark, dir), fre)
       case ReaderSpec.TextMultiline(re, maxChars) =>
-        if (streaming) textMultilineStream(spark, dir, re, maxChars,
+        textMultiline(spark, dir, re, maxChars, streaming = streaming,
           maxFilesPerTrigger = maxFilesPerTrigger, fileRegex = fre)
-        else textMultiline(spark, dir, re, maxChars, fileRegex = fre)
       case ReaderSpec.ThriftFramed(maxBytes) =>
-        if (streaming) thriftFramedStream(spark, dir, maxBytes,
+        thriftFramed(spark, dir, maxBytes, streaming = streaming,
           maxFilesPerTrigger = maxFilesPerTrigger, fileRegex = fre)
-        else thriftFramed(spark, dir, maxBytes, fileRegex = fre)
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
-import java.nio.ByteBuffer
+import java.io.{ByteArrayOutputStream, DataInputStream}
+import java.nio.{BufferUnderflowException, ByteBuffer}
 
 /** Framed-thrift `LogMessage` codec — the reference's on-disk log format
   * (reference: singer-commons/src/main/thrift/singer_if.thrift:11-21, written
@@ -78,87 +78,128 @@ object ThriftLogCodec {
     * not fatal — the reference's oversize-drop behavior
     * (reference: reader/ThriftLogFileReader.java:80-87,148-163). */
   def decodeFrames(bytes: Array[Byte], startOffset: Long = 0L,
-      maxMessageBytes: Int = Int.MaxValue): Iterator[DecodedMessage] =
-    new Iterator[DecodedMessage] {
-      private val buf = ByteBuffer.wrap(bytes)
-      buf.position(math.min(startOffset, bytes.length.toLong).toInt)
-      private var nextMsg: DecodedMessage = _
-      advance()
+      maxMessageBytes: Int = Int.MaxValue): Iterator[DecodedMessage] = {
+    val buf = ByteBuffer.wrap(bytes)
+    buf.position(math.min(startOffset, bytes.length.toLong).toInt)
+    new Frames(new FrameInput {
+      def offset: Long = buf.position()
+      def remaining: Long = buf.remaining()
+      def readInt(): Int = buf.getInt
+      def skip(n: Int): Unit = buf.position(buf.position() + n)
+      def body(n: Int): ByteBuffer = { val b = buf.slice(buf.position(), n); skip(n); b }
+    }, maxMessageBytes)
+  }
 
-      private def advance(): Unit = {
-        nextMsg = null
-        while (nextMsg == null && buf.remaining() >= 4) {
-          val frameStart = buf.position()
-          val len = buf.getInt
-          if (len < 0 || len > buf.remaining()) {
-            buf.position(frameStart) // partial/corrupt tail — stop
-            return
-          }
-          val frameEnd = buf.position() + len
-          if (len > maxMessageBytes) {
-            buf.position(frameEnd) // oversize: skip whole frame
-          } else {
-            nextMsg = decodeStruct(frameEnd)
-            buf.position(frameEnd)
-          }
+  /** The same frames from `rangeLen` bytes of a stream positioned at byte
+    * `startOffset` of its file (`nextByteOffset` stays file-absolute). Only
+    * the current frame is materialized; an oversize frame is skipped unread. */
+  def decodeFrames(in: DataInputStream, startOffset: Long, rangeLen: Long,
+      maxMessageBytes: Int): Iterator[DecodedMessage] = {
+    var consumed = 0L
+    new Frames(new FrameInput {
+      def offset: Long = startOffset + consumed
+      def remaining: Long = rangeLen - consumed
+      def readInt(): Int = { consumed += 4; in.readInt() }
+      def skip(n: Int): Unit = { consumed += n; in.skipNBytes(n) }
+      def body(n: Int): ByteBuffer = {
+        val b = new Array[Byte](n)
+        in.readFully(b)
+        consumed += n
+        ByteBuffer.wrap(b)
+      }
+    }, maxMessageBytes)
+  }
+
+  /** What the frame loop reads: an in-memory buffer (frames decode in
+    * place, uncopied) or a bounded stream. */
+  private trait FrameInput {
+    def offset: Long // absolute offset of the next unread byte
+    def remaining: Long
+    def readInt(): Int
+    def skip(n: Int): Unit
+    def body(n: Int): ByteBuffer // the next `n` bytes as their own buffer
+  }
+
+  /** The one frame loop: length header, partial-tail stop, oversize skip,
+    * struct decode. A malformed struct (required message missing, or fields
+    * overrunning their frame) drops that frame only — the length header
+    * keeps the loop aligned on the next one. */
+  private final class Frames(in: FrameInput, maxMessageBytes: Int)
+      extends Iterator[DecodedMessage] {
+    private var nextMsg: DecodedMessage = _
+    advance()
+
+    private def advance(): Unit = {
+      nextMsg = null
+      while (nextMsg == null && in.remaining >= 4) {
+        val len = in.readInt()
+        if (len < 0 || len > in.remaining) return // partial/corrupt tail — stop
+        if (len > maxMessageBytes) in.skip(len) // oversize: skip whole frame
+        else {
+          val body = in.body(len)
+          nextMsg =
+            try decodeStruct(body, in.offset)
+            catch { case _: BufferUnderflowException | _: IllegalArgumentException => null }
         }
-      }
-
-      private def decodeStruct(frameEnd: Int): DecodedMessage = {
-        var key: Array[Byte] = null
-        var message: Array[Byte] = null
-        var ts: java.lang.Long = null
-        var crc: java.lang.Long = null
-        var done = false
-        while (!done && buf.position() < frameEnd) {
-          val tpe = buf.get()
-          if (tpe == TStop) done = true
-          else {
-            val id = buf.getShort
-            (tpe, id) match {
-              case (TBinary, 1) => key = readBinary()
-              case (TBinary, 2) => message = readBinary()
-              case (TI64, 3) => ts = buf.getLong
-              case (TI64, 4) => crc = buf.getLong
-              case _ => skip(tpe)
-            }
-          }
-        }
-        if (message == null) null // malformed: required field missing — drop
-        else DecodedMessage(key, message, ts, crc, frameEnd.toLong)
-      }
-
-      private def readBinary(): Array[Byte] = {
-        val len = buf.getInt
-        val out = new Array[Byte](len)
-        buf.get(out)
-        out
-      }
-
-      private def skip(tpe: Byte): Unit = tpe match {
-        case TBool | TByte => buf.position(buf.position() + 1)
-        case TI16 => buf.position(buf.position() + 2)
-        case TI32 => buf.position(buf.position() + 4)
-        case TI64 | TDouble => buf.position(buf.position() + 8)
-        case TBinary => buf.position(buf.position() + buf.getInt)
-        case TStruct =>
-          var done = false
-          while (!done) {
-            val t = buf.get()
-            if (t == TStop) done = true else { buf.getShort; skip(t) }
-          }
-        case TList | TSet =>
-          val elemType = buf.get(); val n = buf.getInt
-          var i = 0; while (i < n) { skip(elemType); i += 1 }
-        case TMap =>
-          val kt = buf.get(); val vt = buf.get(); val n = buf.getInt
-          var i = 0; while (i < n) { skip(kt); skip(vt); i += 1 }
-        case _ => throw new IllegalArgumentException(s"unknown thrift type $tpe")
-      }
-
-      override def hasNext: Boolean = nextMsg != null
-      override def next(): DecodedMessage = {
-        val m = nextMsg; advance(); m
       }
     }
+
+    override def hasNext: Boolean = nextMsg != null
+    override def next(): DecodedMessage = {
+      val m = nextMsg; advance(); m
+    }
+  }
+
+  private def decodeStruct(buf: ByteBuffer, nextByteOffset: Long): DecodedMessage = {
+    var key: Array[Byte] = null
+    var message: Array[Byte] = null
+    var ts: java.lang.Long = null
+    var crc: java.lang.Long = null
+    var done = false
+    while (!done && buf.hasRemaining) {
+      val tpe = buf.get()
+      if (tpe == TStop) done = true
+      else {
+        val id = buf.getShort
+        (tpe, id) match {
+          case (TBinary, 1) => key = readBinary(buf)
+          case (TBinary, 2) => message = readBinary(buf)
+          case (TI64, 3) => ts = buf.getLong
+          case (TI64, 4) => crc = buf.getLong
+          case _ => skip(buf, tpe)
+        }
+      }
+    }
+    if (message == null) null // malformed: required field missing — drop
+    else DecodedMessage(key, message, ts, crc, nextByteOffset)
+  }
+
+  private def readBinary(buf: ByteBuffer): Array[Byte] = {
+    val len = buf.getInt
+    if (len < 0 || len > buf.remaining()) throw new BufferUnderflowException
+    val out = new Array[Byte](len)
+    buf.get(out)
+    out
+  }
+
+  private def skip(buf: ByteBuffer, tpe: Byte): Unit = tpe match {
+    case TBool | TByte => buf.position(buf.position() + 1)
+    case TI16 => buf.position(buf.position() + 2)
+    case TI32 => buf.position(buf.position() + 4)
+    case TI64 | TDouble => buf.position(buf.position() + 8)
+    case TBinary => buf.position(buf.position() + buf.getInt)
+    case TStruct =>
+      var done = false
+      while (!done) {
+        val t = buf.get()
+        if (t == TStop) done = true else { buf.getShort; skip(buf, t) }
+      }
+    case TList | TSet =>
+      val elemType = buf.get(); val n = buf.getInt
+      var i = 0; while (i < n) { skip(buf, elemType); i += 1 }
+    case TMap =>
+      val kt = buf.get(); val vt = buf.get(); val n = buf.getInt
+      var i = 0; while (i < n) { skip(buf, kt); skip(buf, vt); i += 1 }
+    case _ => throw new IllegalArgumentException(s"unknown thrift type $tpe")
+  }
 }

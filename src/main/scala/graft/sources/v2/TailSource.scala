@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.ThriftLogCodec
+import graft.sources.{LogSources, ThriftLogCodec}
 
 /** `graft-tail`: a DataSourceV2 streaming source that tails GROWING log
   * files with intra-file byte offsets — the faithful port of the
@@ -34,8 +34,11 @@ import graft.sources.ThriftLogCodec
   * listing)`; a crash re-reads from the last committed offset — the same
   * at-least-once contract.
   *
-  * Options: `path` (directory), `format` = `text` | `thrift`,
-  * `maxBytesPerTrigger` (rate limit, reference `batchSize` analog).
+  * Options: `path` (directory), `format` = `text` | `multiline` | `thrift`,
+  * `maxBytesPerTrigger` (rate limit, reference `batchSize` analog);
+  * `messageStartRegex` and `maxMessageChars` for `multiline`;
+  * `maxMessageBytes` (the thrift oversize drop, default 1 MiB — what
+  * `reader.thrift.maxMessageSize` sets through `LogSources.fromSpec`).
   *
   * Assumptions, shared with the reference: appends are record-atomic
   * (thrift-logger writes whole frames; text loggers write whole lines —
@@ -81,18 +84,20 @@ class TailTable(properties: Map[String, String]) extends Table with SupportsRead
         Option(options.get("messagestartregex")),
         Option(options.get("fileregex")),
         Option(options.get("maxmessagechars")).map(_.toInt).getOrElse(1 << 20),
-        Option(options.get("retentionseconds")).map(_.toLong))
+        Option(options.get("retentionseconds")).map(_.toLong),
+        Option(options.get("maxmessagebytes")).map(_.toInt).getOrElse(1 << 20))
     }
 }
 
 class TailScan(dir: String, format: String, maxBytesPerTrigger: Option[Long],
     startRegex: Option[String], fileRegex: Option[String] = None,
     maxMessageChars: Int = 1 << 20,
-    retentionSeconds: Option[Long] = None) extends Scan {
+    retentionSeconds: Option[Long] = None,
+    maxMessageBytes: Int = 1 << 20) extends Scan {
   override def readSchema(): StructType = TailSource.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new TailMicroBatchStream(dir, format, maxBytesPerTrigger, startRegex, fileRegex,
-      maxMessageChars, retentionSeconds)
+      maxMessageChars, retentionSeconds, maxMessageBytes)
 }
 
 /** Rotation retention — the reference's `logRetentionInSeconds` cleanup
@@ -178,7 +183,8 @@ private[sources] object MultilineAlign {
 class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Option[Long],
     startRegex: Option[String] = None, fileRegex: Option[String] = None,
     maxMessageChars: Int = 1 << 20,
-    retentionSeconds: Option[Long] = None)
+    retentionSeconds: Option[Long] = None,
+    maxMessageBytes: Int = 1 << 20)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   @transient private lazy val startPattern =
@@ -341,7 +347,7 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
       idToPath.get(id).foreach { path =>
         if (endOff > startOff) {
           parts += TailInputPartition(path, startOff, endOff, format, startRegex,
-            maxMessageChars)
+            maxMessageChars, maxMessageBytes)
         }
       }
     }
@@ -377,7 +383,8 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
 }
 
 case class TailInputPartition(path: String, startOff: Long, endOff: Long, format: String,
-    startRegex: Option[String] = None, maxMessageChars: Int = 1 << 20)
+    startRegex: Option[String] = None, maxMessageChars: Int = 1 << 20,
+    maxMessageBytes: Int = 1 << 20)
     extends InputPartition
 
 class TailReaderFactory extends PartitionReaderFactory {
@@ -431,52 +438,21 @@ class TailPartitionReader(p: TailInputPartition) extends PartitionReader[Interna
       // range boundaries are start-regex positions (driver-aligned), so
       // every record in the range is complete; ISO-8859-1 keeps byte math 1:1
       val text = new String(readWholeRange(), java.nio.charset.StandardCharsets.ISO_8859_1)
-      val m = java.util.regex.Pattern
-        .compile(p.startRegex.getOrElse("^"), java.util.regex.Pattern.MULTILINE)
-        .matcher(text)
-      val starts = Iterator.continually(if (m.find()) m.start() else -1)
-        .takeWhile(_ >= 0).toArray
-      starts.iterator.zipWithIndex.map { case (s, i) =>
-        val end = if (i + 1 < starts.length) starts(i + 1) else text.length
-        // oversize records TRUNCATE (not fail) but still consume to `end` —
-        // reference: TextMessageReader.java:107-115
-        val rec = text.substring(s, math.min(end, s + p.maxMessageChars)).stripSuffix("\n")
-        new GenericInternalRow(Array[Any](
-          pathUtf8, p.startOff + end, null,
-          rec.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), null, null))
-      }
+      LogSources.multilineRecords(text, p.startRegex.getOrElse("^"), p.maxMessageChars)
+        .map { case (rec, end) =>
+          new GenericInternalRow(Array[Any](
+            pathUtf8, p.startOff + end, null,
+            rec.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), null, null))
+        }
     case "thrift" =>
-      // frame-at-a-time: only the current frame is ever materialized; a
-      // partial tail (in-progress append) simply ends the iterator without
+      // a partial tail (in-progress append) ends the iterator without
       // advancing the offset past the last complete frame
       openStream()
-      new Iterator[InternalRow] {
-        private var nextRow: InternalRow = _
-        advance()
-        private def advance(): Unit = {
-          nextRow = null
-          while (nextRow == null && rangeLen - consumed >= 4) {
-            val len = in.readInt()
-            if (len < 0 || len > rangeLen - consumed - 4) return // corrupt/partial tail — stop
-            // reconstruct one framed record for the shared codec (4-byte
-            // header + body): bounded by the frame, not the range
-            val frame = new Array[Byte](4 + len)
-            frame(0) = (len >> 24).toByte; frame(1) = (len >> 16).toByte
-            frame(2) = (len >> 8).toByte; frame(3) = len.toByte
-            in.readFully(frame, 4, len)
-            consumed += 4L + len
-            val it = ThriftLogCodec.decodeFrames(frame)
-            if (it.hasNext) { // malformed struct (no required message) → skip frame
-              val d = it.next()
-              nextRow = new GenericInternalRow(Array[Any](
-                pathUtf8, p.startOff + consumed, d.key, d.message,
-                if (d.timestampNanos == null) null else d.timestampNanos.longValue(),
-                if (d.checksum == null) null else d.checksum.longValue()))
-            }
-          }
-        }
-        override def hasNext: Boolean = nextRow != null
-        override def next(): InternalRow = { val r = nextRow; advance(); r }
+      ThriftLogCodec.decodeFrames(in, p.startOff, rangeLen, p.maxMessageBytes).map { d =>
+        new GenericInternalRow(Array[Any](
+          pathUtf8, d.nextByteOffset, d.key, d.message,
+          if (d.timestampNanos == null) null else d.timestampNanos.longValue(),
+          if (d.checksum == null) null else d.checksum.longValue()))
       }
     case _ =>
       // text: records end at '\n'; a trailing partial line is still emitted

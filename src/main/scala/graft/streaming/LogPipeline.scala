@@ -43,9 +43,9 @@ object LogPipeline {
       // packed readers fold filter/prepend/trim into the packing itself
       // (reference: TextLogFileReader.java:161-189); nothing to re-apply
       case tl: ReaderSpec.TextLine if tl.numMessagesPerLogMessage > 1 => ()
-      case ReaderSpec.TextLine(filterRegex, prependTs, prependHost, delim, trim, _) =>
+      // no newline trim: every line reader splits at '\n' and leaves it out
+      case ReaderSpec.TextLine(filterRegex, prependTs, prependHost, delim, _, _) =>
         filterRegex.foreach(re => out = Transforms.filterRegex(out, valueCol, re))
-        if (trim) out = out.withColumn(valueCol, Transforms.trimTrailingNewline(col(valueCol)))
         val prefixes =
           (if (prependTs) Seq(unix_millis(current_timestamp())) else Nil) ++
           (if (prependHost) Seq(lit(hostname)) else Nil)
@@ -112,22 +112,18 @@ object LogPipeline {
           KeyTemplate(keyFormat, cfg.name), maxBytes)
         sink.writeEpoch(df, batchId).map(_.records).sum
       case WriterSpec.Files(path, format) =>
-        val obs = org.apache.spark.sql.Observation()
         // one overwritten directory per epoch: a retried epoch replaces its
         // own output instead of appending duplicates (at-least-once becomes
         // effectively exactly-once for this sink)
-        df.observe(obs, count(lit(1)).as("n"))
-          .write.mode("overwrite").format(format).save(s"$path/batch_id=$batchId")
-        obs.get("n").asInstanceOf[Long]
+        countedWrite(df)(observed => observed.write.mode("overwrite").format(format)
+          .save(s"$path/batch_id=$batchId"))
       case WriterSpec.Kafka(servers, topic, _, false, _) =>
-        val obs = org.apache.spark.sql.Observation()
-        kafkaSinkProjection(df.observe(obs, count(lit(1)).as("n")))
+        countedWrite(df)(observed => kafkaSinkProjection(observed)
           .write.format("kafka")
           .option("kafka.bootstrap.servers", servers)
           .option("topic", topic)
           .option("includeHeaders", "true")
-          .save()
-        obs.get("n").asInstanceOf[Long]
+          .save())
       case WriterSpec.Kafka(servers, topic, _, true, timeoutS) =>
         // transactional epoch path: each sink TASK runs the reference's
         // committable protocol against its own producer (a Kafka transaction
@@ -136,57 +132,65 @@ object LogPipeline {
         // retried task re-sends under a fresh transaction; `_mid` headers
         // keep downstream dedup exact). Producers come from the injectable
         // EpochProducers seam — no kafka-clients jar ships in this build.
-        val obs = org.apache.spark.sql.Observation()
-        val projected = kafkaSinkProjection(df.observe(obs, count(lit(1)).as("n")))
-          .withColumn("partition", col("partition").cast("int"))
-        val hasHeaders = projected.columns.contains("headers")
-        projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val producer = EpochProducers.factory(servers)
-          try {
-            new TransactionalEpochWriter(producer, topic,
-                transactional = true, writeTimeoutSeconds = timeoutS)
-              .writeEpoch(rows.map { r =>
-                val hs: Seq[(String, Array[Byte])] =
-                  if (hasHeaders && !r.isNullAt(r.fieldIndex("headers")))
-                    r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("headers"))
-                      .map(h => (h.getString(0), h.getAs[Array[Byte]](1)))
-                  else Nil
-                EpochRecord(r.getInt(r.fieldIndex("partition")),
-                  r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"), hs)
-              })
-            ()
-          } finally producer.close()
+        countedWrite(df) { observed =>
+          val projected = kafkaSinkProjection(observed)
+            .withColumn("partition", col("partition").cast("int"))
+          val hasHeaders = projected.columns.contains("headers")
+          projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+            val producer = EpochProducers.factory(servers)
+            try {
+              new TransactionalEpochWriter(producer, topic,
+                  transactional = true, writeTimeoutSeconds = timeoutS)
+                .writeEpoch(rows.map { r =>
+                  val hs: Seq[(String, Array[Byte])] =
+                    if (hasHeaders && !r.isNullAt(r.fieldIndex("headers")))
+                      r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("headers"))
+                        .map(h => (h.getString(0), h.getAs[Array[Byte]](1)))
+                    else Nil
+                  EpochRecord(r.getInt(r.fieldIndex("partition")),
+                    r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"), hs)
+                })
+              ()
+            } finally producer.close()
+          }
         }
-        obs.get("n").asInstanceOf[Long]
       case WriterSpec.Pulsar(serviceUrl, topic, _, timeoutS) =>
         // per-task Pulsar batch protocol (sendAsync → flush → await-all;
         // reference: PulsarWriter.java:190-210) against the injectable
         // PulsarProducers seam — the default factory throws the
         // no-client-jar error, so an un-injected run fails with the same
         // clear message as before
-        val obs = org.apache.spark.sql.Observation()
-        val projected = pulsarSinkProjection(df.observe(obs, count(lit(1)).as("n")))
-          .withColumn("partition", col("partition").cast("int"))
-        val hasProps = projected.columns.contains("properties")
-        projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val producer = PulsarProducers.factory(serviceUrl)
-          try {
-            new PulsarEpochWriter(producer, topic, writeTimeoutSeconds = timeoutS)
-              .writeEpoch(rows.map { r =>
-                val props: Map[String, String] =
-                  if (hasProps && !r.isNullAt(r.fieldIndex("properties")))
-                    r.getMap[String, String](r.fieldIndex("properties")).toMap
-                  else Map.empty
-                PulsarRecord(r.getInt(r.fieldIndex("partition")),
-                  r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"), props)
-              })
-            ()
-          } finally producer.close()
+        countedWrite(df) { observed =>
+          val projected = pulsarSinkProjection(observed)
+            .withColumn("partition", col("partition").cast("int"))
+          val hasProps = projected.columns.contains("properties")
+          projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+            val producer = PulsarProducers.factory(serviceUrl)
+            try {
+              new PulsarEpochWriter(producer, topic, writeTimeoutSeconds = timeoutS)
+                .writeEpoch(rows.map { r =>
+                  val props: Map[String, String] =
+                    if (hasProps && !r.isNullAt(r.fieldIndex("properties")))
+                      r.getMap[String, String](r.fieldIndex("properties")).toMap
+                    else Map.empty
+                  PulsarRecord(r.getInt(r.fieldIndex("partition")),
+                    r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"), props)
+                })
+              ()
+            } finally producer.close()
+          }
         }
-        obs.get("n").asInstanceOf[Long]
       case WriterSpec.Noop =>
         df.count()
     }
+  }
+
+  /** Runs `write` over `df` with a row count observed on the way through,
+    * and returns that count — one pass, no second job. */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
   }
 
   /** Start the standing streaming pipeline. */

@@ -34,11 +34,6 @@ object StreamingIvf {
   def init(centroids: DataFrame, path: String): Unit =
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
 
-  /** Cell-route one epoch's vectors and overwrite its epoch directory —
-    * idempotent under foreachBatch replay. `payloadCols` ride along into
-    * the at-rest layout (label/source/quality metadata) so probes can
-    * filter on them without a join back to the source table — the
-    * filtered-ANN-at-rest shape ([[hardNegativeSearch]]). */
   /** Driver-side handle to the store's frozen quantizer. Collect ONCE
     * per maintenance/probe RUN and pass it to [[appendEpoch]] /
     * [[search]] / [[filteredSearch]] via `centsOpt` — each call
@@ -49,6 +44,11 @@ object StreamingIvf {
   def centroids(spark: SparkSession, path: String): Seq[(Int, Array[Double])] =
     Similarity.collectCentroids(spark.read.parquet(s"$path/centroids"))
 
+  /** Cell-route one epoch's vectors and overwrite its epoch directory —
+    * idempotent under foreachBatch replay. `payloadCols` ride along into
+    * the at-rest layout (label/source/quality metadata) so probes can
+    * filter on them without a join back to the source table — the
+    * filtered-ANN-at-rest shape ([[hardNegativeSearch]]). */
   def appendEpoch(batch: DataFrame, path: String, epoch: Long,
       vecCol: String = "embedding", idCol: String = "vec_id",
       payloadCols: Seq[String] = Nil,
@@ -81,6 +81,14 @@ object StreamingIvf {
       }
       .start()
 
+  /** The column name this store's AT-REST tombstone relation keys on —
+    * the exported schema CONTRACT cross-store readers resolve by kind
+    * ([[StreamingHybrid.unionTombstones]], [[graft.streaming.ForgetLedger]])
+    * instead of guessing from the relation's columns (round-15 verdict
+    * #5: the "first column that isn't epoch/batch" heuristic broke
+    * silently the moment any store grew an extra tombstone column). */
+  val TombstoneIdCol = "vec_id"
+
   /** Tombstone DELETE for the standing index — the right-to-be-forgotten
     * path that never rewrites the at-rest corpus inline: deleted ids land
     * as one per-epoch tombstone relation (idempotent overwrite, like
@@ -90,14 +98,6 @@ object StreamingIvf {
     * cleared) — the log-structured-merge delete. Precedence: a tombstone
     * dominates ANY epoch's row for that id, including re-appends after
     * the delete, until a compact clears it. */
-  /** The column name this store's AT-REST tombstone relation keys on —
-    * the exported schema CONTRACT cross-store readers resolve by kind
-    * ([[StreamingHybrid.unionTombstones]], [[graft.streaming.ForgetLedger]])
-    * instead of guessing from the relation's columns (round-15 verdict
-    * #5: the "first column that isn't epoch/batch" heuristic broke
-    * silently the moment any store grew an extra tombstone column). */
-  val TombstoneIdCol = "vec_id"
-
   def deleteEpoch(ids: DataFrame, path: String, epoch: Long,
       idCol: String = "vec_id"): Unit = {
     // refuse during a maintenance swap: a tombstone written after the

@@ -76,5 +76,23 @@ class LogSourcesSpec extends AnyFunSuite with SparkTestBase {
     val df = LogSources.thriftFramed(spark, dir.toString, maxMessageBytes = 1000)
     val vals = df.collect().map(r => new String(r.getAs[Array[Byte]]("value")))
     assert(vals.toList == List("fine"))
+
+    // the same directory through the file-stream and graft-tail readers:
+    // `reader.thrift.maxMessageSize` drops the same frame in every mode
+    import graft.model._
+    import graft.streaming.LogPipeline
+    def streamed(tail: Boolean): List[String] = {
+      val out = tempDir()
+      val cfg = PipelineConfig(name = s"oversize-$tail", logDir = dir.toString,
+        reader = ReaderSpec.ThriftFramed(maxMessageBytes = 1000),
+        writer = WriterSpec.Files(out.toString),
+        checkpointDir = Some(tempDir().toString), tailMode = tail)
+      LogPipeline.start(spark, cfg, org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .awaitTermination()
+      spark.read.parquet(out.toString).collect()
+        .map(r => new String(r.getAs[Array[Byte]]("value"))).toList
+    }
+    assert(streamed(tail = false) == List("fine"))
+    assert(streamed(tail = true) == List("fine"))
   }
 }

@@ -205,6 +205,44 @@ class TailSourceSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  test("multiline tail reader and splitMultiline agree on records and end offsets") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.sources.v2.{TailInputPartition, TailPartitionReader}
+    val re = "^I[0-9]{5}"
+    val maxChars = 40
+    val startLine = Gen.chooseNum(0, 99999).map(n => f"I$n%05d payload")
+    val contLine = Gen.alphaNumStr.map("  " + _)
+    val linesGen = Gen.listOfN(8, Gen.oneOf(startLine, contLine))
+    (0 until 10).foreach { i =>
+      linesGen(Gen.Parameters.default, Seed(42L + i)).foreach { lines =>
+        // one oversize record in every input: truncated, yet fully consumed
+        val content = ("I00000 " + "x" * (2 * maxChars) :: lines).mkString("", "\n", "\n")
+        val f = tempDir().resolve("m.log")
+        Files.writeString(f, content)
+        val expected = LogSources.multilineRecords(content, re, maxChars).toList
+        assert(expected.map(_._1) == LogSources.splitMultiline(content, re, maxChars).toList)
+        assert(expected.head._1.length == maxChars)
+        // each record ends where its successor's start line begins, the
+        // last at EOF
+        val allLines = content.split("\n")
+        val startOffsets = allLines.scanLeft(0)(_ + _.length + 1).zip(allLines)
+          .collect { case (off, l) if l.matches("I[0-9]{5}.*") => off }
+        assert(expected.map(_._2) == startOffsets.tail.toList :+ content.length)
+        // latestOffset cuts ranges at record starts: read from the second one
+        val from = expected.head._2
+        val reader = new TailPartitionReader(TailInputPartition(f.toString,
+          from.toLong, content.length.toLong, "multiline", Some(re), maxChars))
+        val got = Iterator.continually(reader.next()).takeWhile(identity)
+          .map(_ => (new String(reader.get().getBinary(3), "ISO-8859-1"),
+            reader.get().getLong(1)))
+          .toList
+        reader.close()
+        assert(got == expected.tail.map { case (r, end) => (r, end.toLong) })
+      }
+    }
+  }
+
   test("rename-rotation keeps inode offsets: no re-ingest, tail follows the renamed file") {
     val dir = tempDir()
     val f = dir.resolve("app.log")

@@ -68,6 +68,17 @@ class ThriftLogCodecSpec extends AnyFunSuite {
     assert(ds.map(d => new String(d.message)) == List("small"))
   }
 
+  test("a struct overrunning its frame drops that frame only") {
+    // message field claims 100 bytes inside a 9-byte frame body
+    val body = Array[Byte](TBinary, 0, 2, 0, 0, 0, 100, 'x', TStop)
+    val bad = java.nio.ByteBuffer.allocate(4 + body.length)
+      .putInt(body.length).put(body).array()
+    val good = encodeFrame(null, "after".getBytes)
+    val ds = decodeFrames(concat(bad, good)).toList
+    assert(ds.map(d => new String(d.message)) == List("after"))
+    assert(ds.head.nextByteOffset == (bad.length + good.length).toLong)
+  }
+
   test("unknown extra fields are skipped") {
     // hand-build a frame with an extra i32 field id 9 before message
     val body = new ByteArrayOutputStream()
