@@ -20,20 +20,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
+      // GraftSession's 10k codegen cache matters here: at the default 100
+      // the suite thrashes — measured on w7_stream_curation: 1024 Janino
+      // compiles PER ITERATION (even the third), 14.3 s kept; with a 10k
+      // cache the second iteration compiles ~76 and runs 8.6 s
+      val s = GraftSession.builder("graft-bench")
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // The default codegen cache holds 100 generated classes; this
-        // suite's 229 queries generate thousands of distinct fragments, so
-        // the default thrashes — measured on w7_stream_curation: 1024
-        // Janino compiles PER ITERATION (even the third), 14.3 s kept;
-        // with a 10k cache the second iteration compiles ~76 and runs
-        // 8.6 s. Production-relevant too: any deployment running a mixed
-        // query load should raise this (see ARCHITECTURE.md).
-        .config("spark.sql.codegen.cache.maxEntries", "10000")
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s

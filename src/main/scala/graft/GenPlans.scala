@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates PLANS.md: the formatted physical plan of every SparkEntry
@@ -22,11 +21,10 @@ import org.apache.spark.sql.execution.ExplainMode
 object GenPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-gen-plans")
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

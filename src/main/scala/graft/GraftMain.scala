@@ -129,11 +129,8 @@ object GraftMain {
     val confDir = args.headOption.getOrElse("conf.d")
     val auditDir = args.lift(1)
     val heartbeatFile = args.lift(2)
-    val spark = SparkSession.builder()
-      .appName("graft-agent")
-      // spark-submit supplies spark.master; standalone launches run local
-      .master(sys.props.getOrElse("spark.master", sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("graft-agent")
+      .master(GraftSession.defaultMaster)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emit: Option[String => Unit] = heartbeatFile.map { f => (line: String) =>

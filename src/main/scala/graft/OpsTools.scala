@@ -141,10 +141,11 @@ object ThriftLogGen {
   * anti-join every store's read path applies); the next [[CompactTool]]
   * run purges the bytes and retires the tombstones. NOT safe during a
   * maintenance swap — the store's [[graft.streaming.MaintenanceLease]]
-  * makes that a loud refusal instead of a silently lost delete. Each
-  * invocation RESERVES the next free tombstone epoch with an atomic
-  * exclusive create unless one is given, so concurrent delete requests
-  * accumulate instead of overwriting each other.
+  * makes that a loud refusal instead of a silently lost delete. Unless an
+  * epoch is given, each invocation takes the next free one from
+  * [[graft.streaming.StoreTombstones.nextEpoch]], which owns the delete
+  * format and its epoch reservations (see ARCHITECTURE.md, "Standing
+  * stores: one tombstone store").
   *
   * CROSS-STORE mode (`all`): a real pipeline stores the same document in
   * several standing stores at once (BM25 + IVF + packed + curation) — a
@@ -162,19 +163,17 @@ object ForgetTool {
   def forget(spark: org.apache.spark.sql.SparkSession, kind: String,
       path: String, ids: Seq[Long], epoch: Option[Long] = None): Long = {
     import spark.implicits._
-    val e = epoch.getOrElse(nextTombstoneEpoch(spark, path))
-    kind.toLowerCase match {
-      case "ivf" =>
-        graft.streaming.StreamingIvf.deleteEpoch(ids.toDF("vec_id"), path, e)
-      case "bm25" =>
-        graft.streaming.StreamingBm25.deleteEpoch(ids.toDF("doc_id"), path, e)
-      case "packed" =>
-        graft.sources.PackedCorpus.deleteEpoch(ids.toDF("doc_id"), path, e)
+    val delete: Long => Unit = kind.toLowerCase match {
+      case "ivf" => graft.streaming.StreamingIvf.deleteEpoch(ids.toDF("vec_id"), path, _)
+      case "bm25" => graft.streaming.StreamingBm25.deleteEpoch(ids.toDF("doc_id"), path, _)
+      case "packed" => graft.sources.PackedCorpus.deleteEpoch(ids.toDF("doc_id"), path, _)
       case "curation" =>
-        graft.streaming.StreamingCuration.deleteEpoch(ids.toDF("doc_id"), path, e)
+        graft.streaming.StreamingCuration.deleteEpoch(ids.toDF("doc_id"), path, _)
       case other => throw new IllegalArgumentException(
         s"unknown store kind '$other' (want ivf|bm25|packed|curation)")
     }
+    val e = epoch.getOrElse(graft.streaming.StoreTombstones.nextEpoch(spark, path))
+    delete(e)
     // ledger AFTER the store accepts the tombstone (a crash in between
     // leaves a forget to re-run, never a recorded-but-unapplied one):
     // the sibling [[graft.streaming.ForgetLedger]] lives OUTSIDE the
@@ -221,51 +220,6 @@ object ForgetTool {
     }
   }
 
-  /** Allocate the next free tombstone epoch COLLISION-PROOF: the naive
-    * list-max+1 is a non-atomic read-then-write — two concurrent
-    * invocations compute the same epoch and mode("overwrite") each
-    * other's delete set, silently losing a right-to-be-forgotten request
-    * (round-13 advisory). Here each candidate epoch is RESERVED with an
-    * atomic exclusive create of a dot-file under `tombstones/` before it
-    * is returned; a loser of the race sees the reservation (or the
-    * create throws) and moves to the next number. Dot-files are
-    * invisible to the stores' parquet tombstone reads, and the next
-    * compact retires them with the tombstone directory. The index stores
-    * partition tombstones by `epoch=`, the curation state by `batch=`;
-    * parse both so repeated deletes ACCUMULATE in every store kind. */
-  private def nextTombstoneEpoch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri,
-      spark.sessionState.newHadoopConf())
-    fs.mkdirs(p)
-    val taken = fs.listStatus(p).map(_.getPath.getName)
-      .collect {
-        case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong
-        case s if s.startsWith("batch=") => s.stripPrefix("batch=").toLong
-        case s if s.startsWith(".reserved-") => s.stripPrefix(".reserved-").toLong
-      }
-      .foldLeft(-1L)(math.max)
-    var e = taken + 1L
-    while (!tryReserve(fs, p, e)) e += 1L
-    e
-  }
-
-  private def tryReserve(fs: org.apache.hadoop.fs.FileSystem,
-      tombstones: org.apache.hadoop.fs.Path, epoch: Long): Boolean = {
-    val rp = new org.apache.hadoop.fs.Path(tombstones, s".reserved-$epoch")
-    if (fs.exists(rp)) false
-    else try {
-      // exclusive create: atomic on local/HDFS — exactly one racer wins;
-      // any other IO failure propagates (a swallow-and-retry here would
-      // spin forever on a persistently failing filesystem)
-      fs.create(rp, false).close()
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: ForgetTool <ivf|bm25|packed|curation> <path> <id,id,...|@idsFile> [epoch]\n" +
@@ -276,12 +230,8 @@ object ForgetTool {
           .map(_.trim).filter(_.nonEmpty).map(_.toLong)
       else args(2).split(',').toSeq.map(_.trim).filter(_.nonEmpty).map(_.toLong)
     require(ids.nonEmpty, "no ids to forget")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("graft-forget")
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-forget")
+      .master(GraftSession.defaultMaster).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       if (args(0).equalsIgnoreCase("all")) {
@@ -341,12 +291,8 @@ object CompactTool {
       "usage: CompactTool <ivf|bm25|packed|curation> <path> [targetFileBytes]\n" +
         "       CompactTool ivf-refit <path> <centroidsParquet>\n" +
         "       CompactTool bm25-rebucket <path> <nBuckets>")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("graft-compact")
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-compact")
+      .master(GraftSession.defaultMaster).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       args(0).toLowerCase match {
@@ -814,12 +760,8 @@ object SnapshotTool {
         "       SnapshotTool verify <storeRoot> <name>\n" +
         "       SnapshotTool delete <storeRoot> <name>\n" +
         "       SnapshotTool prune <storeRoot> --keep <n>")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("graft-snapshot")
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-snapshot")
+      .master(GraftSession.defaultMaster).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       args(0).toLowerCase match {
@@ -924,12 +866,8 @@ object ProbeTool {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ProbeTool <ivf|bm25|packed|curation> <path> [...]")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("graft-probe")
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-probe")
+      .master(GraftSession.defaultMaster).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val (kind, rest) = (args(0), args.toSeq.drop(2))

@@ -22,10 +22,8 @@ import org.apache.spark.sql.functions._
   *    video-dup gate (fixture generation / demux+hash / full pairs ×3). */
 object ScaleProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("scale-profile").master("local[32]")
+    val spark = GraftSession.builder("scale-profile").master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
       .config("spark.driver.host", "localhost")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1390,7 +1390,7 @@ object SparkEntry {
       require(fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
         "the corpus must hold only the compacted epoch")
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")),
+      require(graft.streaming.StoreTombstones.retired(s, dir),
         "compaction must retire the applied tombstone store")
       graft.sources.PackedCorpus.readAll(s, dir)
         .select(col("doc_id"),
@@ -2413,7 +2413,7 @@ object SparkEntry {
         () => graft.streaming.StreamingBm25.compact(s, bmPath),
         () => graft.streaming.StreamingIvf.compact(s, ivPath))
       Seq(bmPath, ivPath).foreach { p =>
-        require(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/tombstones")),
+        require(graft.streaming.StoreTombstones.retired(s, p),
           s"compact must retire the applied tombstones at $p")
       }
       graft.streaming.StreamingHybrid.rrfSearch(
@@ -2762,7 +2762,7 @@ object SparkEntry {
           .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
           s"$p must hold only the compacted epoch")
       }
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")),
+      require(graft.streaming.StoreTombstones.retired(s, path),
         "compaction must clear the applied tombstone store")
       graft.streaming.StreamingBm25.search(s, path, qs, k = 10)
         .orderBy("query_id", "rank")
@@ -5271,7 +5271,7 @@ object SparkEntry {
       require(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/corpus"))
         .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
         "corpus must hold only the compacted epoch")
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")),
+      require(graft.streaming.StoreTombstones.retired(s, path),
         "compaction must clear the applied tombstone store")
       graft.streaming.StreamingIvf.search(
           s, path, emb.filter(col("vec_id") < 5), k = 5, nProbe = 2)

@@ -31,18 +31,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-verify")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // harmless no-op when events.ts is a real timestamp column; keeps
       // BIGINT-nanos testdata readable (SparkEntry.events normalizes both)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the 229-query surface generates far more than the default 100
-      // cached codegen entries; the default thrashes (measured: w7 alone
-      // re-Janino-compiled 1024 fragments per run, PLANS.md w7 breakdown)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.operators.SkewGuard.registerMetricsLogger(spark) // no-silent-cap logging

@@ -138,56 +138,30 @@ object PackedCorpus {
   /** Tombstone DELETE for the standing export — the packed-corpus leg of
     * the right-to-be-forgotten path ([[graft.streaming.StreamingIvf
     * .deleteEpoch]]'s stance, LSM form): deleted ids land as one
-    * per-epoch parquet tombstone relation under `dir/tombstones/`
-    * (idempotent overwrite, like every epoch write), [[readAll]] masks
-    * them immediately (broadcast anti-join — the delete set is
-    * vanishingly small next to the corpus), and the next [[compact]]
-    * folds them into the rewrite: the compacted part pairs are written
-    * from the MASKED read, and the whole-directory swap that promotes
-    * them atomically retires the tombstone store (it lives inside the
-    * directory being swapped — apply and clear are one commit).
-    * Precedence: a tombstone dominates ANY epoch's sequence for that id,
-    * including re-appends after the delete, until a compact clears it. */
-  /** At-rest tombstone id column — the exported schema contract
-    * ([[graft.streaming.StreamingIvf.TombstoneIdCol]]'s stance). */
-  val TombstoneIdCol = "doc_id"
-
+    * per-epoch [[graft.streaming.StoreTombstones]] relation (idempotent
+    * overwrite, like every epoch write; its `tombstones` directory never
+    * matches [[readAll]]'s `epoch=*` part-pair glob), [[readAll]] masks
+    * them immediately, and the next [[compact]] folds them into the
+    * rewrite: the compacted part pairs are written from the MASKED read,
+    * and the whole-directory swap that promotes them atomically retires
+    * the tombstone store (it lives inside the directory being swapped —
+    * apply and clear are one commit). Precedence: a tombstone dominates
+    * ANY epoch's sequence for that id, including re-appends after the
+    * delete, until a compact clears it. Refuses during a maintenance
+    * swap. */
   def deleteEpoch(ids: DataFrame, dir: String, epoch: Long,
-      idCol: String = "doc_id"): Unit = {
-    // refuse during a maintenance swap: a tombstone written after the
-    // swap staged its masked rewrite would be retired UNAPPLIED by the
-    // promote — a silently lost delete request; the intent marker makes
-    // the write-starts-first ordering refuse on the maintenance side too
-    graft.streaming.MaintenanceLease.withEpochWriteIntent(ids.sparkSession,
-      dir, Seq(dir)) {
-      ids.select(col(idCol).cast("long").as(idCol)).distinct()
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/tombstones/epoch=$epoch")
-    }
-  }
-
-  /** The at-rest tombstone union, if any delete epoch exists. The
-    * `tombstones` directory name never matches [[readAll]]'s `epoch=*`
-    * part-pair glob, so the two stores share `dir` without collision. */
-  private def tombstoneDf(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val t = s"$dir/tombstones"
-    if (graft.streaming.StateCompaction.hasVisibleEntries(spark, t))
-      Some(spark.read.parquet(t))
-    else None
-  }
+      idCol: String = "doc_id"): Unit =
+    graft.streaming.StoreTombstones.write(ids, "packed", dir, epoch, idCol,
+      intentRoots = Seq(dir))
 
   /** Read a [[writeEpoch]]-produced directory (all epochs) back as
     * (idCol, token_ids), with any un-compacted tombstones masked
     * (broadcast anti-join — no shuffle joins the part-pair scan). */
   def readAll(spark: SparkSession, dir: String, idCol: String = "doc_id",
-      tokensCol: String = "token_ids"): DataFrame = {
-    val raw = readGlob(spark, s"$dir/epoch=*/part-*.idx", idCol, tokensCol)
-    tombstoneDf(spark, dir)
-      .map(t => raw.join(
-        broadcast(t.select(col(idCol).cast("long").as(idCol)).distinct()),
-        Seq(idCol), "left_anti"))
-      .getOrElse(raw)
-  }
+      tokensCol: String = "token_ids"): DataFrame =
+    graft.streaming.StoreTombstones.mask(
+      readGlob(spark, s"$dir/epoch=*/part-*.idx", idCol, tokensCol),
+      "packed", dir, idCol)
 
   /** Fold every `epoch=<n>` part-pair set into one `epoch=-1` set — the
     * packed-corpus leg of the standing chain's maintenance path, sharing

@@ -475,6 +475,7 @@ class TailPartitionReader(p: TailInputPartition) extends PartitionReader[Interna
         override def next(): InternalRow = {
           val line = new java.io.ByteArrayOutputStream(256)
           var done = false
+          var terminated = false
           while (!done) {
             ensure()
             if (chunkPos >= chunkLen) done = true // end of range: partial line
@@ -483,12 +484,20 @@ class TailPartitionReader(p: TailInputPartition) extends PartitionReader[Interna
               while (i < chunkLen && chunk(i) != '\n') i += 1
               line.write(chunk, chunkPos, i - chunkPos)
               consumed += i - chunkPos
-              if (i < chunkLen) { consumed += 1; chunkPos = i + 1; done = true }
-              else chunkPos = i
+              if (i < chunkLen) {
+                consumed += 1; chunkPos = i + 1; done = true; terminated = true
+              } else chunkPos = i
             }
           }
+          // a CRLF line ending drops its '\r' too, as the replay readers
+          // (Spark's text source) do; byteOffset still counts it
+          val bytes = line.toByteArray
+          val n = bytes.length
+          val value =
+            if (terminated && n > 0 && bytes(n - 1) == '\r') java.util.Arrays.copyOf(bytes, n - 1)
+            else bytes
           new GenericInternalRow(Array[Any](
-            pathUtf8, p.startOff + consumed, null, line.toByteArray, null, null))
+            pathUtf8, p.startOff + consumed, null, value, null, null))
         }
       }
   }

@@ -5,35 +5,6 @@ import java.net.URI
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The per-store tombstone SCHEMA catalog — kind → (id column, epoch
-  * partition key), resolved from the constants each store exports
-  * ([[StreamingIvf.TombstoneIdCol]] and siblings) instead of guessed
-  * from a relation's columns (round-15 verdict #5: the "first column
-  * that isn't epoch/batch" heuristic broke silently the moment any
-  * store grew an extra tombstone column). */
-object StoreTombstones {
-
-  /** The id column `kind`'s at-rest tombstone relation keys on. */
-  def idCol(kind: String): String = kind.toLowerCase match {
-    case "ivf" => StreamingIvf.TombstoneIdCol
-    case "bm25" => StreamingBm25.TombstoneIdCol
-    case "packed" => graft.sources.PackedCorpus.TombstoneIdCol
-    case "curation" => StreamingCuration.TombstoneIdCol
-    case other => throw new IllegalArgumentException(
-      s"unknown store kind '$other' (want ivf|bm25|packed|curation)")
-  }
-
-  /** The partition key `kind`'s tombstone epochs land under (`epoch` for
-    * the index stores, `batch` for the curation state — matching each
-    * store's own epoch vocabulary). */
-  def epochKey(kind: String): String = kind.toLowerCase match {
-    case "curation" => "batch"
-    case "ivf" | "bm25" | "packed" => "epoch"
-    case other => throw new IllegalArgumentException(
-      s"unknown store kind '$other' (want ivf|bm25|packed|curation)")
-  }
-}
-
 /** Append-only right-to-be-forgotten LEDGER for a standing store — the
   * piece that makes an RTBF request survive a [[graft.SnapshotTool]]
   * restore (round-15 verdict #1). Tombstones live INSIDE the swapped
@@ -123,27 +94,17 @@ object ForgetLedger {
     * .restore]]'s hook: the re-applied tombstones ride the same
     * commit-marker promote as the snapshot bytes, so the restored store
     * masks the forgotten ids from its very first live read. Writes with
-    * the kind's OWN id column and epoch key ([[StoreTombstones]]); the
-    * epoch number continues past any tombstone epochs the snapshot
-    * itself captured (re-applying an id the snapshot already tombstones
-    * is harmless — the mask is a union). */
+    * the kind's OWN id column and epoch key, at an epoch reserved by
+    * [[StoreTombstones.nextEpoch]] — past every tombstone epoch and
+    * reservation the snapshot itself captured (re-applying an id the
+    * snapshot already tombstones is harmless — the mask is a union). */
   def reapplyInto(spark: SparkSession, stagingRoot: String,
       entries: Map[String, Seq[Long]]): Unit = {
     import spark.implicits._
     entries.toSeq.sortBy(_._1).foreach { case (kind, ids) =>
-      val key = StoreTombstones.epochKey(kind)
-      val idCol = StoreTombstones.idCol(kind)
-      val tdir = s"${stagingRoot.stripSuffix("/")}/tombstones"
-      val f = fs(spark, tdir)
-      val p = new Path(tdir)
-      val next =
-        if (!f.exists(p)) 0L
-        else f.listStatus(p).map(_.getPath.getName).collect {
-          case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong
-          case s if s.startsWith("batch=") => s.stripPrefix("batch=").toLong
-        }.foldLeft(-1L)(math.max) + 1L
-      ids.toDS().toDF(idCol).coalesce(1)
-        .write.mode("overwrite").parquet(s"$tdir/$key=$next")
+      StoreTombstones.write(ids.toDF("id"), kind, stagingRoot,
+        StoreTombstones.nextEpoch(spark, stagingRoot), idCol = "id",
+        intentRoots = Nil)
     }
   }
 

@@ -277,20 +277,6 @@ object StateCompaction {
     }.toMap
   }
 
-  /** True when `dir` exists and holds at least one NON-HIDDEN entry —
-    * the guard tombstone readers use: a tombstones directory holding only
-    * ForgetTool's `.reserved-N` dot-files (its crash window between
-    * reserving an epoch and writing the delete set) must read as "no
-    * tombstones", not feed a data-less directory to a parquet read. */
-  def hasVisibleEntries(spark: SparkSession, dir: String): Boolean = {
-    val fs = fileSystem(spark, dir)
-    val p = new Path(dir)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith(".") && !n.startsWith("_")
-    }
-  }
-
   private def stagingPath(dir: String) = new Path(dir + ".compacting")
   private def markerPath(dir: String) = new Path(dir + ".compacting.COMMITTED")
 

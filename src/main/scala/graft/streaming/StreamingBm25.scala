@@ -114,8 +114,7 @@ object StreamingBm25 {
       idCol: String = "doc_id"): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1: $nBuckets")
     val spark0 = batch.sparkSession
-    MaintenanceLease.withEpochWriteIntent(spark0, path,
-      Seq(path, s"$path/postings", s"$path/stats")) {
+    MaintenanceLease.withEpochWriteIntent(spark0, path, intentRoots(path)) {
       validateOrRecordNBuckets(spark0, path, nBuckets)
       val toks = batch.select(col(idCol),
         TextFunctions.tokens(lower(col(textCol))).as("toks"))
@@ -151,9 +150,14 @@ object StreamingBm25 {
       }
       .start()
 
+  /** The swap roots an epoch write must not race: the store root
+    * ([[compact]]), the postings ([[rebucket]]) and the stats. */
+  private def intentRoots(path: String): Seq[String] =
+    Seq(path, s"$path/postings", s"$path/stats")
+
   /** Tombstone DELETE for the standing index — [[StreamingIvf.deleteEpoch]]'s
-    * lexical twin: deleted doc ids land as per-epoch tombstone relations;
-    * [[search]] anti-joins them out of the pruned postings scan
+    * lexical twin: deleted doc ids land as per-epoch [[StoreTombstones]]
+    * relations; [[search]] anti-joins them out of the pruned postings scan
     * immediately (df self-adjusts — it is derived from the surviving
     * postings), and the next [[compact]] drops their rows from the
     * at-rest bytes, subtracts their (count, Σdl) from the corpus stats,
@@ -163,31 +167,10 @@ object StreamingBm25 {
     * the probe-cost discipline), so absolute scores are slightly stale
     * while the RESULT SET is already exact. A zero-token deleted doc has
     * no postings to see: it keeps its +1 in N until a rebuild (it never
-    * ranks, carrying no terms). */
-  /** At-rest tombstone id column — the exported schema contract
-    * ([[StreamingIvf.TombstoneIdCol]]'s stance). */
-  val TombstoneIdCol = "doc_id"
-
+    * ranks, carrying no terms). Refuses during a maintenance swap. */
   def deleteEpoch(ids: DataFrame, path: String, epoch: Long,
-      idCol: String = "doc_id"): Unit = {
-    // refuse during a maintenance swap: a tombstone written after the
-    // swap staged its masked rewrite would be retired UNAPPLIED by the
-    // promote — a silently lost delete request; the intent marker makes
-    // the write-starts-first ordering refuse on the maintenance side too
-    MaintenanceLease.withEpochWriteIntent(ids.sparkSession, path,
-      Seq(path, s"$path/postings", s"$path/stats")) {
-      ids.select(col(idCol).cast("long").as(idCol)).distinct()
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/tombstones/epoch=$epoch")
-    }
-  }
-
-  private def tombstoneDf(spark: SparkSession, path: String): Option[DataFrame] = {
-    val t = s"$path/tombstones"
-    if (StateCompaction.hasVisibleEntries(spark, t))
-      Some(spark.read.parquet(t))
-    else None
-  }
+      idCol: String = "doc_id"): Unit =
+    StoreTombstones.write(ids, "bm25", path, epoch, idCol, intentRoots(path))
 
   /** Fold the per-epoch directories into one (`epoch=-1`), preserving the
     * `bucket` partitioning (and with it the probe's partition pruning),
@@ -221,9 +204,8 @@ object StreamingBm25 {
         ()
       else StateCompaction.compactWith(spark, path, fence) { staging =>
         val nb = storedNBuckets(spark, path)
-        val ts = tombstoneDf(spark, path)
-          .map(_.select(col(idCol).cast("long").as(idCol)).distinct()
-            .localCheckpoint(true))
+        val ts = StoreTombstones.ids(spark, Seq("bm25" -> path), idCol)
+          .map(_.localCheckpoint(true))
         val (rc, rs) = ts.map { t =>
           // the victims' stats delta, measured from the still-live
           // postings ((doc, dl) distinct — dl repeats per term row)
@@ -237,9 +219,7 @@ object StreamingBm25 {
         StateCompaction.stageCompacted(spark, postingsDir, key = "epoch",
           stagingTarget = s"$staging/postings", partitionCols = Seq("bucket"),
           targetFileBytes = targetFileBytes,
-          transform = df =>
-            ts.map(t => df.join(broadcast(t), Seq(idCol), "left_anti"))
-              .getOrElse(df))
+          transform = StoreTombstones.mask(_, ts, idCol))
         spark.read.parquet(s"$path/stats").drop("epoch")
           .agg((coalesce(sum("n_docs"), lit(0L)) - rc).as("n_docs"),
             (coalesce(sum("sum_dl"), lit(0.0)) - rs).as("sum_dl"))
@@ -340,11 +320,7 @@ object StreamingBm25 {
     // (broadcast anti-join; df below self-adjusts — it is derived from
     // the surviving rows). N/avgdl stay stale until compact — see
     // deleteEpoch's LSM-trade note.
-    val postings = tombstoneDf(spark, path)
-      .map(t => pruned.join(
-        broadcast(t.select(col(idCol).cast("long").as(idCol)).distinct()),
-        Seq(idCol), "left_anti"))
-      .getOrElse(pruned)
+    val postings = StoreTombstones.mask(pruned, "bm25", path, idCol)
       .select(col("term"), col(idCol), col("dl"), col("tf"))
       .persist(MEMORY_AND_DISK)
     val dfRel = postings.groupBy("term")

@@ -292,14 +292,15 @@ object StreamingCuration {
         // entry AND publish an intent over the whole read-judge-write
         // batch so a maintenance acquire refuses mid-flight — see
         // MaintenanceLease
-        MaintenanceLease.withEpochWriteIntent(spark, stateDir,
-          Seq("digests", "sigs", "verdicts").map(s => s"$stateDir/$s")) {
+        MaintenanceLease.withEpochWriteIntent(spark, stateDir, intentRoots(stateDir)) {
           // un-compacted tombstones mask the dedup memory: a batch arriving
           // after a delete is judged as if the deleted docs never landed
-          val digests = maskTombstones(spark, stateDir,
-            readStateOr(spark, s"$stateDir/digests", emptyDigests(spark)), "id")
-          val sigs = maskTombstones(spark, stateDir,
-            readStateOr(spark, s"$stateDir/sigs", emptySigs(spark)), "id")
+          val digests = StoreTombstones.mask(
+            readStateOr(spark, s"$stateDir/digests", emptyDigests(spark)),
+            "curation", stateDir, "id")
+          val sigs = StoreTombstones.mask(
+            readStateOr(spark, s"$stateDir/sigs", emptySigs(spark)),
+            "curation", stateDir, "id")
           val (v, dd, sd, release) = curateBatch(batch, digests, sigs, probeH,
             minQuality, threshold, probeNgram, nShards, maxBucket, textCol, idCol)
           // deltas first (overwrite = replay-idempotent), verdict last
@@ -329,61 +330,34 @@ object StreamingCuration {
     else spark.read.parquet(subdirs.toIndexedSeq: _*)
   }
 
+  /** The swap roots an epoch write must not race: the three per-batch
+    * state relations [[compactState]] swaps. */
+  private def intentRoots(stateDir: String): Seq[String] =
+    Seq("digests", "sigs", "verdicts").map(s => s"$stateDir/$s")
+
   /** Tombstone DELETE for the standing curation state — right to be
     * forgotten for FINGERPRINTS: erasing a document must also erase its
     * dedup memory (exact digest + LSH signatures) and its verdict rows,
     * or the pipeline would keep suppressing future re-submissions of
     * content whose original is gone — the opposite of forgetting.
-    * Deleted ids land as one per-epoch tombstone relation (idempotent
-    * overwrite); every state read masks them immediately (broadcast
-    * anti-join: [[run]]'s next batch is judged as if the docs never
-    * landed, [[verdicts]] stops reporting them), and [[compactState]]
-    * folds them into the rewrite and clears the store — the same LSM
-    * delete as the other three standing stores. */
-  /** At-rest tombstone id column — the exported schema contract
-    * ([[StreamingIvf.TombstoneIdCol]]'s stance). NOTE: the curation
-    * store WRITES its tombstones under `id` (the digest relation's key),
-    * whatever the caller's input column was named. */
-  val TombstoneIdCol = "id"
-
+    * Deleted ids land as one per-batch [[StoreTombstones]] relation
+    * (keyed `id`, the digest relation's key, whatever `idCol` names the
+    * input); every state read masks them immediately ([[run]]'s next
+    * batch is judged as if the docs never landed, [[verdicts]] stops
+    * reporting them), and [[compactState]] folds them into the rewrite
+    * and clears the store — the same LSM delete as the other three
+    * standing stores. Refuses during a maintenance swap. */
   def deleteEpoch(ids: DataFrame, stateDir: String, epoch: Long,
-      idCol: String = "doc_id"): Unit = {
-    // refuse during a maintenance swap: a tombstone written after the
-    // swap staged its masked rewrite would be retired UNAPPLIED by the
-    // promote — a silently lost delete (anti-RTBF) request; the intent
-    // marker makes the write-starts-first ordering refuse on the
-    // maintenance side too
-    MaintenanceLease.withEpochWriteIntent(ids.sparkSession, stateDir,
-      Seq("digests", "sigs", "verdicts").map(s => s"$stateDir/$s")) {
-      ids.select(col(idCol).cast("long").as("id")).distinct()
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$stateDir/tombstones/batch=$epoch")
-    }
-  }
-
-  private def tombstoneDf(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val t = s"$stateDir/tombstones"
-    if (StateCompaction.hasVisibleEntries(spark, t))
-      Some(spark.read.parquet(t))
-    else None
-  }
-
-  /** Mask un-compacted tombstones out of a state relation keyed by
-    * `keyCol` (broadcast anti-join — the delete set is tiny). */
-  private def maskTombstones(spark: SparkSession, stateDir: String,
-      df: DataFrame, keyCol: String): DataFrame =
-    tombstoneDf(spark, stateDir)
-      .map(t => df.join(
-        broadcast(t.select(col("id").cast("long").as(keyCol)).distinct()),
-        Seq(keyCol), "left_anti"))
-      .getOrElse(df)
+      idCol: String = "doc_id"): Unit =
+    StoreTombstones.write(ids, "curation", stateDir, epoch, idCol,
+      intentRoots(stateDir))
 
   /** Cumulative verdicts written by [[run]] so far, minus any
     * un-compacted tombstones. */
   def verdicts(spark: SparkSession, stateDir: String, idCol: String = "doc_id"): DataFrame =
-    maskTombstones(spark, stateDir,
+    StoreTombstones.mask(
       readStateOr(spark, s"$stateDir/verdicts", emptyVerdict(spark, idCol)),
-      idCol)
+      "curation", stateDir, idCol)
 
   /** Fold the per-epoch state subdirectories into one (`batch=-1`) each —
     * run while the pipeline is stopped; see [[StateCompaction]] for the
@@ -403,11 +377,6 @@ object StreamingCuration {
   def compactState(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id"): Unit =
     MaintenanceLease.withLease(spark, stateDir, op = "compact") { fence =>
-      val ts = tombstoneDf(spark, stateDir)
-        .map(_.select(col("id").cast("long").as("id")).distinct())
-      def drop(df: DataFrame, keyCol: String): DataFrame =
-        ts.map(t => df.join(broadcast(t.select(col("id").as(keyCol))),
-          Seq(keyCol), "left_anti")).getOrElse(df)
       // three INDEPENDENT swaps (no cross-relation derived quantity —
       // each relation's tombstone mask is self-contained, unlike the
       // BM25 stats debit), so ordered-idempotent is enough: a crash
@@ -417,12 +386,9 @@ object StreamingCuration {
       Seq("digests" -> "id", "sigs" -> "id", "verdicts" -> idCol).foreach {
         case (sub, kc) =>
           StateCompaction.compact(spark, s"$stateDir/$sub", key = "batch",
-            transform = df => drop(df, kc), fence = fence)
+            transform = StoreTombstones.mask(_, "curation", stateDir, kc),
+            fence = fence)
       }
-      ts.foreach { _ =>
-        val p = new org.apache.hadoop.fs.Path(s"$stateDir/tombstones")
-        org.apache.hadoop.fs.FileSystem.get(p.toUri,
-          spark.sessionState.newHadoopConf()).delete(p, true)
-      }
+      StoreTombstones.retire(spark, stateDir)
     }
 }

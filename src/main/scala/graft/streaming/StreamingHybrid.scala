@@ -98,34 +98,16 @@ object StreamingHybrid {
     * ranked list (broadcast anti-join per list; ranks preserved — see
     * the class doc for why masked rows leave gaps, not re-ranks).
     * `stores` are (kind, path) pairs — the kind resolves each store's
-    * tombstone id column through the exported [[StoreTombstones]]
-    * contract. */
+    * tombstone id column through [[StoreTombstones]]. */
   def maskAll(spark: SparkSession, lists: Seq[DataFrame],
-      stores: Seq[(String, String)], idCol: String = "doc_id"): Seq[DataFrame] =
-    unionTombstones(spark, stores, idCol) match {
-      case Some(mask) =>
-        val m = broadcast(mask)
-        lists.map(_.join(m, Seq(idCol), "left_anti"))
-      case None => lists
-    }
-
-  /** The distinct union of the stores' visible tombstone ids, if any —
-    * every standing store keeps its pending deletes under
-    * `<root>/tombstones/`. The id column is resolved PER KIND from the
-    * store's own exported contract ([[StoreTombstones.idCol]]), never
-    * guessed from the relation's columns — an extra column in any
-    * store's tombstone schema (round-15 verdict #5) can no longer
-    * silently redirect the cross-store mask. */
-  def unionTombstones(spark: SparkSession, stores: Seq[(String, String)],
-      idCol: String = "doc_id"): Option[DataFrame] = {
-    val sets = stores.flatMap { case (kind, p) =>
-      val t = s"$p/tombstones"
-      if (StateCompaction.hasVisibleEntries(spark, t)) {
-        val c = StoreTombstones.idCol(kind)
-        Some(spark.read.parquet(t).select(col(c).cast("long").as(idCol)))
-      } else None
-    }
-    if (sets.isEmpty) None
-    else Some(sets.reduce(_ unionByName _).distinct())
+      stores: Seq[(String, String)], idCol: String = "doc_id"): Seq[DataFrame] = {
+    val mask = unionTombstones(spark, stores, idCol)
+    lists.map(StoreTombstones.mask(_, mask, idCol))
   }
+
+  /** The distinct union of the stores' visible tombstone ids as one
+    * long `idCol` column, if any store has one. */
+  def unionTombstones(spark: SparkSession, stores: Seq[(String, String)],
+      idCol: String = "doc_id"): Option[DataFrame] =
+    StoreTombstones.ids(spark, stores, idCol)
 }

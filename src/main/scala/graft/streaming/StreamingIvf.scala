@@ -58,7 +58,7 @@ object StreamingIvf {
     // AND publish an intent so a maintenance acquire refuses over this
     // in-flight write — see MaintenanceLease; path itself is a swap
     // root (refit), corpus is one (compact)
-    MaintenanceLease.withEpochWriteIntent(spark, path, Seq(path, s"$path/corpus")) {
+    MaintenanceLease.withEpochWriteIntent(spark, path, intentRoots(path)) {
       val cents = centsOpt.getOrElse(centroids(spark, path))
       batch.select(col(idCol) +: col(vecCol) +: payloadCols.map(col): _*)
         .withColumn("cell",
@@ -81,45 +81,23 @@ object StreamingIvf {
       }
       .start()
 
-  /** The column name this store's AT-REST tombstone relation keys on —
-    * the exported schema CONTRACT cross-store readers resolve by kind
-    * ([[StreamingHybrid.unionTombstones]], [[graft.streaming.ForgetLedger]])
-    * instead of guessing from the relation's columns (round-15 verdict
-    * #5: the "first column that isn't epoch/batch" heuristic broke
-    * silently the moment any store grew an extra tombstone column). */
-  val TombstoneIdCol = "vec_id"
+  /** The swap roots an epoch write must not race: the store root
+    * ([[refit]]) and the corpus ([[compact]]). */
+  private def intentRoots(path: String): Seq[String] = Seq(path, s"$path/corpus")
 
   /** Tombstone DELETE for the standing index — the right-to-be-forgotten
     * path that never rewrites the at-rest corpus inline: deleted ids land
-    * as one per-epoch tombstone relation (idempotent overwrite, like
-    * every epoch write), probes anti-join them (broadcast — tombstones
-    * are vanishingly small next to the corpus), and the next [[compact]]
-    * folds them INTO the rewrite (deleted rows dropped, tombstone store
-    * cleared) — the log-structured-merge delete. Precedence: a tombstone
-    * dominates ANY epoch's row for that id, including re-appends after
-    * the delete, until a compact clears it. */
+    * as one per-epoch tombstone relation in the [[StoreTombstones]]
+    * format, probes anti-join them, and the next [[compact]] folds them
+    * INTO the rewrite (deleted rows dropped, tombstone store retired) —
+    * the log-structured-merge delete. Precedence: a tombstone dominates
+    * ANY epoch's row for that id, including re-appends after the delete,
+    * until a compact clears it. Refuses during a maintenance swap (a
+    * tombstone written after the swap staged its masked rewrite would be
+    * retired UNAPPLIED by the promote). */
   def deleteEpoch(ids: DataFrame, path: String, epoch: Long,
-      idCol: String = "vec_id"): Unit = {
-    // refuse during a maintenance swap: a tombstone written after the
-    // swap staged its masked rewrite would be retired UNAPPLIED by the
-    // promote — a silently lost delete request; the intent marker makes
-    // the write-starts-first ordering refuse on the maintenance side too
-    MaintenanceLease.withEpochWriteIntent(ids.sparkSession, path,
-      Seq(path, s"$path/corpus")) {
-      ids.select(col(idCol).cast("long").as(idCol)).distinct()
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/tombstones/epoch=$epoch")
-    }
-  }
-
-  /** The at-rest tombstone union, if any delete epoch exists (a dir
-    * holding only ForgetTool reservation dot-files reads as none). */
-  private def tombstoneDf(spark: SparkSession, path: String): Option[DataFrame] = {
-    val t = s"$path/tombstones"
-    if (StateCompaction.hasVisibleEntries(spark, t))
-      Some(spark.read.parquet(t))
-    else None
-  }
+      idCol: String = "vec_id"): Unit =
+    StoreTombstones.write(ids, "ivf", path, epoch, idCol, intentRoots(path))
 
   /** Fold the per-epoch corpus directories into one (`epoch=-1`),
     * preserving the `cell` partitioning (and with it the probe's partition
@@ -136,18 +114,10 @@ object StreamingIvf {
       // finish a torn REFIT swap first (it swaps the store root this
       // subdir swap lives under)
       StateCompaction.recover(spark, path)
-      val ts = tombstoneDf(spark, path)
-        .map(_.select(col(idCol).cast("long").as(idCol)).distinct())
       StateCompaction.compact(spark, s"$path/corpus", key = "epoch",
         partitionCols = Seq("cell"), targetFileBytes = targetFileBytes,
-        transform = df =>
-          ts.map(t => df.join(broadcast(t), Seq(idCol), "left_anti")).getOrElse(df),
-        fence = fence)
-      ts.foreach { _ =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-        org.apache.hadoop.fs.FileSystem.get(p.toUri,
-          spark.sessionState.newHadoopConf()).delete(p, true)
-      }
+        transform = StoreTombstones.mask(_, "ivf", path, idCol), fence = fence)
+      StoreTombstones.retire(spark, path)
     }
 
   /** REFIT — the answer to centroid drift that the per-epoch append
@@ -175,11 +145,7 @@ object StreamingIvf {
         // file index would dangle if recover finished a torn prior swap
         val corpus = spark.read.option("basePath", s"$path/corpus")
           .parquet(s"$path/corpus").drop("epoch").drop("cell")
-        val masked = tombstoneDf(spark, path)
-          .map(t => corpus.join(
-            broadcast(t.select(col(idCol).cast("long").as(idCol)).distinct()),
-            Seq(idCol), "left_anti"))
-          .getOrElse(corpus)
+        val masked = StoreTombstones.mask(corpus, "ivf", path, idCol)
         newCentroids.coalesce(1).write.mode("overwrite")
           .parquet(s"$staging/centroids")
         masked
@@ -396,12 +362,7 @@ object StreamingIvf {
         col(vecCol).as("corpus_vec") +:
         corpusPayloadCols.map(c => col(c).as(s"corpus_$c")): _*)
     // un-compacted tombstones mask their rows at the probe scan
-    // (broadcast anti-join — the delete set is tiny next to the corpus)
-    val corpus = tombstoneDf(spark, path)
-      .map(t => scanned.join(
-        broadcast(t.select(col(idCol).cast("long").as("corpus_id")).distinct()),
-        Seq("corpus_id"), "left_anti"))
-      .getOrElse(scanned)
+    val corpus = StoreTombstones.mask(scanned, "ivf", path, "corpus_id")
     val scored = corpus.join(broadcast(queryCells), Seq("cell"))
       .filter(col("corpus_id") =!= col("query_id"))
       .filter(predicate.getOrElse(lit(true)))

@@ -79,20 +79,45 @@ class LogSourcesSpec extends AnyFunSuite with SparkTestBase {
 
     // the same directory through the file-stream and graft-tail readers:
     // `reader.thrift.maxMessageSize` drops the same frame in every mode
+    val reader = graft.model.ReaderSpec.ThriftFramed(maxMessageBytes = 1000)
+    assert(streamed(dir, reader, tail = false) == List("fine"))
+    assert(streamed(dir, reader, tail = true) == List("fine"))
+  }
+
+  test("textLines drops the \\r of a CRLF line ending in batch, file-stream and tail modes") {
+    val dir = tempDir()
+    val f = dir.resolve("crlf.log")
+    Files.write(f, "one\r\ntwo\r\n".getBytes("US-ASCII"))
+    val batch = LogSources.textLines(spark, dir.toString)
+      .select("value").collect().map(_.getString(0)).toList
+    assert(batch == List("one", "two"))
+    val reader = graft.model.ReaderSpec.TextLine()
+    assert(streamed(dir, reader, tail = false) == List("one", "two"))
+    assert(streamed(dir, reader, tail = true) == List("one", "two"))
+    // the tail watermark still counts the dropped '\r': each record's
+    // byteOffset is the offset of the byte after its '\n'
+    val r = new graft.sources.v2.TailPartitionReader(
+      graft.sources.v2.TailInputPartition(f.toString, 0L, 10L, "text"))
+    val offsets = Iterator.continually(r.next()).takeWhile(identity)
+      .map(_ => r.get().getLong(1)).toList
+    r.close()
+    assert(offsets == List(5L, 10L))
+  }
+
+  /** Deliver `dir` through `LogPipeline.start` — the file-stream reader,
+    * or graft-tail when `tail` — under `Trigger.AvailableNow`, and return
+    * the delivered values in order. */
+  private def streamed(dir: Path, reader: graft.model.ReaderSpec,
+      tail: Boolean): List[String] = {
     import graft.model._
     import graft.streaming.LogPipeline
-    def streamed(tail: Boolean): List[String] = {
-      val out = tempDir()
-      val cfg = PipelineConfig(name = s"oversize-$tail", logDir = dir.toString,
-        reader = ReaderSpec.ThriftFramed(maxMessageBytes = 1000),
-        writer = WriterSpec.Files(out.toString),
-        checkpointDir = Some(tempDir().toString), tailMode = tail)
-      LogPipeline.start(spark, cfg, org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .awaitTermination()
-      spark.read.parquet(out.toString).collect()
-        .map(r => new String(r.getAs[Array[Byte]]("value"))).toList
-    }
-    assert(streamed(tail = false) == List("fine"))
-    assert(streamed(tail = true) == List("fine"))
+    val out = tempDir()
+    val cfg = PipelineConfig(name = s"${dir.getFileName}-$tail", logDir = dir.toString,
+      reader = reader, writer = WriterSpec.Files(out.toString),
+      checkpointDir = Some(tempDir().toString), tailMode = tail)
+    LogPipeline.start(spark, cfg, org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .awaitTermination()
+    spark.read.parquet(out.toString).collect()
+      .map(r => new String(r.getAs[Array[Byte]]("value"))).toList.sorted
   }
 }

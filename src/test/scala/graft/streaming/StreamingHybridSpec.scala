@@ -40,12 +40,12 @@ class StreamingHybridSpec extends AnyFunSuite with SparkTestBase {
       .coalesce(1).write.parquet(s"$bmDir/tombstones/epoch=0")
     val mask = StreamingHybrid.unionTombstones(spark, Seq("bm25" -> bmDir)).get
     assert(mask.as[Long].collect().sorted.toSeq == Seq(5L, 7L),
-      "the mask must key on the kind's exported TombstoneIdCol (doc_id)")
-    // every kind resolves to its store's exported constant
-    assert(StoreTombstones.idCol("ivf") == StreamingIvf.TombstoneIdCol)
-    assert(StoreTombstones.idCol("bm25") == StreamingBm25.TombstoneIdCol)
-    assert(StoreTombstones.idCol("packed") == graft.sources.PackedCorpus.TombstoneIdCol)
-    assert(StoreTombstones.idCol("curation") == StreamingCuration.TombstoneIdCol)
+      "the mask must key on the kind's id column (doc_id)")
+    // every kind resolves to its literal id column
+    assert(StoreTombstones.idCol("ivf") == "vec_id")
+    assert(StoreTombstones.idCol("bm25") == "doc_id")
+    assert(StoreTombstones.idCol("packed") == "doc_id")
+    assert(StoreTombstones.idCol("curation") == "id")
     assert(StoreTombstones.epochKey("curation") == "batch")
     assert(StoreTombstones.epochKey("ivf") == "epoch")
     intercept[IllegalArgumentException] { StoreTombstones.idCol("nope") }
