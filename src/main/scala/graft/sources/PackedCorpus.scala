@@ -184,12 +184,13 @@ object PackedCorpus {
     val parts =
       if (numParts > 0) numParts else spark.sparkContext.defaultParallelism
     graft.streaming.MaintenanceLease.withLease(spark, dir, op = "compact") { fence =>
-      graft.streaming.StateCompaction.compactWith(spark, dir, fence) { staging =>
-        write(readAll(spark, dir, idCol, tokensCol)
-            .repartitionByRange(parts, col(idCol)),
-          s"$staging/epoch=-1", idCol, tokensCol)
-        ()
-      }
+      if (graft.streaming.StateCompaction.holdsEpochs(spark, dir, "epoch"))
+        graft.streaming.StateCompaction.compactWith(spark, dir, fence) { staging =>
+          write(readAll(spark, dir, idCol, tokensCol)
+              .repartitionByRange(parts, col(idCol)),
+            s"$staging/epoch=-1", idCol, tokensCol)
+          ()
+        }
     }
   }
 

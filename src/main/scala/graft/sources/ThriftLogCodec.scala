@@ -81,7 +81,7 @@ object ThriftLogCodec {
       maxMessageBytes: Int = Int.MaxValue): Iterator[DecodedMessage] = {
     val buf = ByteBuffer.wrap(bytes)
     buf.position(math.min(startOffset, bytes.length.toLong).toInt)
-    new Frames(new FrameInput {
+    decoded(new FrameInput {
       def offset: Long = buf.position()
       def remaining: Long = buf.remaining()
       def readInt(): Int = buf.getInt
@@ -94,20 +94,16 @@ object ThriftLogCodec {
     * `startOffset` of its file (`nextByteOffset` stays file-absolute). Only
     * the current frame is materialized; an oversize frame is skipped unread. */
   def decodeFrames(in: DataInputStream, startOffset: Long, rangeLen: Long,
-      maxMessageBytes: Int): Iterator[DecodedMessage] = {
-    var consumed = 0L
-    new Frames(new FrameInput {
-      def offset: Long = startOffset + consumed
-      def remaining: Long = rangeLen - consumed
-      def readInt(): Int = { consumed += 4; in.readInt() }
-      def skip(n: Int): Unit = { consumed += n; in.skipNBytes(n) }
-      def body(n: Int): ByteBuffer = {
-        val b = new Array[Byte](n)
-        in.readFully(b)
-        consumed += n
-        ByteBuffer.wrap(b)
-      }
-    }, maxMessageBytes)
+      maxMessageBytes: Int): Iterator[DecodedMessage] =
+    decoded(streamInput(in, startOffset, rangeLen), maxMessageBytes)
+
+  /** The file-absolute end of every WHOLE frame in `rangeLen` bytes of a
+    * stream positioned at byte `startOffset`, oversize and malformed frames
+    * included — the record boundaries graft-tail commits at. Bodies are
+    * skipped unread. */
+  def frameEnds(in: DataInputStream, startOffset: Long, rangeLen: Long): Iterator[Long] = {
+    val input = streamInput(in, startOffset, rangeLen)
+    frames(input).map { len => input.skip(len); input.offset }
   }
 
   /** What the frame loop reads: an in-memory buffer (frames decode in
@@ -120,35 +116,39 @@ object ThriftLogCodec {
     def body(n: Int): ByteBuffer // the next `n` bytes as their own buffer
   }
 
-  /** The one frame loop: length header, partial-tail stop, oversize skip,
-    * struct decode. A malformed struct (required message missing, or fields
-    * overrunning their frame) drops that frame only — the length header
-    * keeps the loop aligned on the next one. */
-  private final class Frames(in: FrameInput, maxMessageBytes: Int)
-      extends Iterator[DecodedMessage] {
-    private var nextMsg: DecodedMessage = _
-    advance()
-
-    private def advance(): Unit = {
-      nextMsg = null
-      while (nextMsg == null && in.remaining >= 4) {
-        val len = in.readInt()
-        if (len < 0 || len > in.remaining) return // partial/corrupt tail — stop
-        if (len > maxMessageBytes) in.skip(len) // oversize: skip whole frame
-        else {
-          val body = in.body(len)
-          nextMsg =
-            try decodeStruct(body, in.offset)
-            catch { case _: BufferUnderflowException | _: IllegalArgumentException => null }
-        }
+  private def streamInput(in: DataInputStream, startOffset: Long, rangeLen: Long): FrameInput = {
+    var consumed = 0L
+    new FrameInput {
+      def offset: Long = startOffset + consumed
+      def remaining: Long = rangeLen - consumed
+      def readInt(): Int = { consumed += 4; in.readInt() }
+      def skip(n: Int): Unit = { consumed += n; in.skipNBytes(n) }
+      def body(n: Int): ByteBuffer = {
+        val b = new Array[Byte](n)
+        in.readFully(b)
+        consumed += n
+        ByteBuffer.wrap(b)
       }
     }
-
-    override def hasNext: Boolean = nextMsg != null
-    override def next(): DecodedMessage = {
-      val m = nextMsg; advance(); m
-    }
   }
+
+  /** The one frame loop: the body length of each WHOLE frame, read from its
+    * header, stopping at a partial or corrupt tail. The caller consumes the
+    * body before asking for the next frame. */
+  private def frames(in: FrameInput): Iterator[Int] =
+    Iterator.continually(if (in.remaining >= 4) in.readInt() else -1)
+      .takeWhile(len => len >= 0 && len <= in.remaining)
+
+  /** Decoded messages: an oversize frame is skipped, and a malformed
+    * struct (required message missing, or fields overrunning their frame)
+    * drops that frame only — the length header keeps the loop aligned on
+    * the next one. */
+  private def decoded(in: FrameInput, maxMessageBytes: Int): Iterator[DecodedMessage] =
+    frames(in).flatMap { len =>
+      if (len > maxMessageBytes) { in.skip(len); None }
+      else try Option(decodeStruct(in.body(len), in.offset))
+      catch { case _: BufferUnderflowException | _: IllegalArgumentException => None }
+    }
 
   private def decodeStruct(buf: ByteBuffer, nextByteOffset: Long): DecodedMessage = {
     var key: Array[Byte] = null

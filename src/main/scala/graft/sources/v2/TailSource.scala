@@ -30,9 +30,9 @@ import graft.sources.{LogSources, ThriftLogCodec}
   * Streaming offset = `{path -> committed byte offset}` JSON, checkpointed
   * by the engine's WAL exactly where the reference persisted thrift-JSON
   * watermark files (reference: utils/WatermarkUtils.java:47-105). Each
-  * micro-batch reads the per-file byte ranges `[committed, length-at-
-  * listing)`; a crash re-reads from the last committed offset — the same
-  * at-least-once contract.
+  * micro-batch reads the per-file byte ranges `[committed, record end at
+  * or below the length at listing)`; a crash re-reads from the last
+  * committed offset — the same at-least-once contract.
   *
   * Options: `path` (directory), `format` = `text` | `multiline` | `thrift`,
   * `maxBytesPerTrigger` (rate limit, reference `batchSize` analog);
@@ -40,11 +40,15 @@ import graft.sources.{LogSources, ThriftLogCodec}
   * `maxMessageBytes` (the thrift oversize drop, default 1 MiB — what
   * `reader.thrift.maxMessageSize` sets through `LogSources.fromSpec`).
   *
-  * Assumptions, shared with the reference: appends are record-atomic
-  * (thrift-logger writes whole frames; text loggers write whole lines —
-  * reference: reader/ThriftReader.java framing), and rotation renames
-  * never copy-truncate. A shrunken file is treated as rotated: its tail
-  * restarts from 0.
+  * Record boundaries: every committed range ends at the last WHOLE record
+  * ([[RecordAlign]]), as the reference persists the `nextPosition` of the
+  * last whole message (reference: DefaultLogStreamProcessor.java:553-582).
+  * A length listed mid-append is never taken as a boundary: a torn thrift
+  * frame and an unterminated trailing line wait for the rest of their
+  * bytes, a multiline record for its successor's start. So a file whose
+  * tail never completes is never fully committed, and [[TailRetention]]
+  * keeps it. Rotation renames never copy-truncate; a shrunken file is
+  * treated as rotated: its tail restarts from 0.
   *
   * Scale: listing is O(files) on the driver per trigger; decode runs in
   * executors, one task per (file, range) — ranges of distinct files run in
@@ -108,8 +112,9 @@ class TailScan(dir: String, format: String, maxBytesPerTrigger: Option[Long],
   * committed data can be reclaimed (the same safety the reference gets by
   * cleaning after the watermark write). */
 object TailRetention {
-  /** Paths eligible for deletion: fully ingested at the committed offset,
-    * older than retention, and never the active head (the most recently
+  /** Paths eligible for deletion: fully ingested at the committed offset
+    * (`committed >= len`, which a file with a torn tail never reaches, so
+    * it is kept), older than retention, and never the active head (the most recently
     * modified file survives even when idle — the reference only deletes
     * files strictly before the one holding the committed position). */
   def sweep(files: Seq[(String, String, Long, Long)], // (id, path, len, mtimeMs)
@@ -142,26 +147,70 @@ object TailOffset {
   }
 }
 
-/** Driver-side multiline record alignment with BOUNDED IO: find the last
-  * `messageStartRegex` match in `(startOff, cappedEnd)` by scanning backward
-  * in doubling chunks from the window's tail. Byte↔char math uses ISO-8859-1
-  * (1:1) so offsets are exact for arbitrary bytes; patterns are expected to
-  * match ASCII. Pure over an injected `readRange` so specs can meter bytes
-  * read. */
-private[sources] object MultilineAlign {
+/** Where graft-tail ranges end: every committed range ends at a whole
+  * record. A range that starts at record boundary `startOff` with budget
+  * end `cappedEnd` ends at the largest boundary in `(startOff, cappedEnd]`;
+  * else, when one record is larger than the budget, at the first boundary
+  * past the cap that is at or below the listed length; else at `startOff`
+  * (nothing whole to read yet). A boundary is the byte after a `\n`
+  * (text), a `messageStartRegex` match (multiline) or the end of a whole
+  * frame (thrift). The listed length is no boundary: a `stat` can see an
+  * append half done. Pure over injected reads so specs can meter bytes. */
+private[sources] object RecordAlign {
 
-  /** Returns the largest match start in `(startOff, cappedEnd)`, or
-    * `startOff` when there is none. Candidate matches inside a chunk that
-    * begins mid-stream only count AFTER the chunk's first newline (a
-    * MULTILINE `^` would otherwise false-match at the chunk's cut point);
-    * matches missed that way sit in the next, larger chunk. */
+  /** Text boundaries: the position after each `\n`. */
+  val LineBoundary: java.util.regex.Pattern = java.util.regex.Pattern.compile("(?<=\n)")
+
+  /** [[rangeEnd]] over regex boundaries (text and multiline): the bounded
+    * backward scan, then a forward scan only when no boundary lies inside
+    * the budget. */
+  def rangeEnd(pattern: java.util.regex.Pattern, startOff: Long, cappedEnd: Long,
+      fileLen: Long, readRange: (Long, Long) => Array[Byte]): Long = {
+    val last = lastStartBoundary(pattern, startOff, cappedEnd, readRange)
+    if (last > startOff) last
+    else {
+      // the whole of [startOff, cappedEnd) holds no boundary: read forward
+      // from startOff (a line start) in doubling windows to the first one
+      var hi = cappedEnd
+      var chunk = 256L << 10
+      while (hi < fileLen) {
+        hi = math.min(fileLen, hi + chunk)
+        chunk *= 2
+        val m = pattern.matcher(latin1(readRange(startOff, hi)))
+        if (m.find(1)) return startOff + m.start()
+      }
+      startOff
+    }
+  }
+
+  /** [[rangeEnd]] over an ascending iterator of whole-record ends (thrift
+    * frames); reads stop at the first end past the cap. */
+  def rangeEnd(ends: Iterator[Long], startOff: Long, cappedEnd: Long): Long = {
+    var end = startOff
+    while (ends.hasNext) {
+      val e = ends.next()
+      if (e <= cappedEnd) end = e
+      else return if (end > startOff) end else e
+    }
+    end
+  }
+
+  /** The bounded backward scan: the largest match start in
+    * `(startOff, cappedEnd]` (a zero-width match may sit at `cappedEnd`),
+    * or `startOff` when there is none, found by scanning backward in
+    * doubling chunks from the window's tail, so the driver reads
+    * O(distance to the last boundary), not O(new bytes). Candidate matches
+    * inside a chunk that begins mid-stream only count AFTER the chunk's
+    * first newline (a MULTILINE `^` would otherwise false-match at the
+    * chunk's cut point); matches missed that way sit in the next, larger
+    * chunk. Byte↔char math uses ISO-8859-1 (1:1) so offsets are exact for
+    * arbitrary bytes; patterns are expected to match ASCII. */
   def lastStartBoundary(pattern: java.util.regex.Pattern, startOff: Long, cappedEnd: Long,
       readRange: (Long, Long) => Array[Byte], initialChunkBytes: Int = 256 << 10): Long = {
     var chunk = math.max(initialChunkBytes.toLong, 16L)
     while (true) {
       val lo = math.max(startOff, cappedEnd - chunk)
-      val text = new String(readRange(lo, cappedEnd),
-        java.nio.charset.StandardCharsets.ISO_8859_1)
+      val text = latin1(readRange(lo, cappedEnd))
       // a match AT startOff is the old boundary (no progress) — require > 0
       val minPos =
         if (lo == startOff) 1
@@ -178,6 +227,9 @@ private[sources] object MultilineAlign {
     }
     startOff // unreachable
   }
+
+  private def latin1(bytes: Array[Byte]): String =
+    new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
 }
 
 class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Option[Long],
@@ -226,7 +278,10 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
 
   /** Rate-limited head: the returned offset IS what gets committed, so the
     * per-trigger byte budget must be applied here, not at planning time —
-    * otherwise capped-away bytes would be skipped forever. */
+    * otherwise capped-away bytes would be skipped forever. Each file's
+    * range ends at a whole record ([[RecordAlign]]); a multiline record is
+    * whole only once the NEXT record starts (reference:
+    * TextMessageReader.java:120-125). */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[TailOffset].files
     var budget = maxBytesPerTrigger.getOrElse(Long.MaxValue)
@@ -238,92 +293,40 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
         case None => 0L
       }
       val take = math.min(len - startOff, budget).max(0L)
-      // a capped range must end on a RECORD boundary or the split record
-      // would be emitted twice (fragment now, full line next trigger);
-      // EOF is a boundary by the record-atomic-append assumption — EXCEPT
-      // for multiline records, whose final record is only complete once the
-      // NEXT record starts (reference: TextMessageReader.java:120-125), so
-      // multiline always aligns, even at EOF
-      val end =
-        if (take == 0L) startOff
-        else if (format == "multiline")
-          alignToMultilineBoundary(path, startOff, startOff + take, len)
-        else if (startOff + take >= len) startOff + take
-        else alignToRecordBoundary(path, startOff, startOff + take, len)
-      budget -= (end - startOff).max(0L)
+      val end = if (take == 0L) startOff else recordEnd(path, startOff, startOff + take, len)
+      budget -= end - startOff
       out += id -> end
     }
     TailOffset(out.result())
   }
 
-  /** Multiline boundary: the last `messageStartRegex` match position in
-    * (startOff, cappedEnd] — every record BEFORE a following start is
-    * complete; the in-progress final record stays un-committed until its
-    * successor appears. Delegates to [[MultilineAlign.lastStartBoundary]],
-    * which scans BACKWARD in chunks so the driver reads O(distance to the
-    * last record start), not O(new bytes) — a multi-GB append between
-    * triggers costs one tail chunk, not a multi-GB driver read. */
-  private def alignToMultilineBoundary(path: String, startOff: Long, cappedEnd: Long,
-      fileLen: Long): Long = {
-    val p = startPattern.getOrElse(throw new IllegalArgumentException(
-      "format=multiline requires option messageStartRegex"))
-    val raf = new RandomAccessFile(path, "r")
-    try MultilineAlign.lastStartBoundary(p, startOff, math.min(cappedEnd, fileLen),
-      (lo, hi) => {
+  /** [[RecordAlign.rangeEnd]] for this stream's format. Thrift walks the
+    * frame headers of `[startOff, cappedEnd]` (further only for a frame
+    * larger than the budget) through [[ThriftLogCodec.frameEnds]]; text
+    * and multiline read one tail chunk. */
+  private def recordEnd(path: String, startOff: Long, cappedEnd: Long, fileLen: Long): Long =
+    if (format == "thrift") {
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+        new java.io.FileInputStream(path), TailPartitionReader.BufferBytes))
+      try {
+        in.skipNBytes(startOff)
+        RecordAlign.rangeEnd(ThriftLogCodec.frameEnds(in, startOff, fileLen - startOff),
+          startOff, cappedEnd)
+      } finally in.close()
+    } else {
+      val pattern =
+        if (format != "multiline") RecordAlign.LineBoundary
+        else startPattern.getOrElse(throw new IllegalArgumentException(
+          "format=multiline requires option messageStartRegex"))
+      val raf = new RandomAccessFile(path, "r")
+      try RecordAlign.rangeEnd(pattern, startOff, cappedEnd, fileLen, (lo, hi) => {
         val buf = new Array[Byte]((hi - lo).toInt)
         raf.seek(lo)
         raf.readFully(buf)
         buf
       })
-    finally raf.close()
-  }
-
-  /** Largest record boundary in (startOff, cappedEnd]; if a single record
-    * exceeds the budget, extends FORWARD past the cap to the next boundary
-    * so the stream always makes progress. Driver-side IO bounded by the
-    * trigger budget (and only runs for rate-capped files). */
-  private def alignToRecordBoundary(path: String, startOff: Long, cappedEnd: Long,
-      fileLen: Long): Long = {
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      if (format == "thrift") {
-        // walk 4-byte frame-length headers forward from startOff
-        var pos = startOff
-        var lastBoundary = startOff
-        var grown = false
-        while (pos + 4 <= fileLen && (pos < cappedEnd || !grown)) {
-          raf.seek(pos)
-          val len = raf.readInt()
-          if (len < 0 || pos + 4 + len > fileLen) return lastBoundary // partial tail
-          pos += 4 + len
-          if (pos <= cappedEnd) lastBoundary = pos
-          else if (lastBoundary == startOff) { lastBoundary = pos; grown = true } // oversize record
-          else grown = true
-        }
-        lastBoundary
-      } else {
-        // scan backward from cappedEnd for '\n'
-        val window = 8192
-        var end = cappedEnd
-        while (end > startOff) {
-          val from = math.max(startOff, end - window)
-          val buf = new Array[Byte]((end - from).toInt)
-          raf.seek(from)
-          raf.readFully(buf)
-          var i = buf.length - 1
-          while (i >= 0 && buf(i) != '\n') i -= 1
-          if (i >= 0) return from + i + 1
-          end = from
-        }
-        // no newline inside the budget: scan forward so we still progress
-        raf.seek(cappedEnd)
-        var pos = cappedEnd
-        var b = raf.read()
-        while (b != -1 && b != '\n') { pos += 1; b = raf.read() }
-        if (b == '\n') pos + 1 else fileLen
-      }
-    } finally raf.close()
-  }
+      finally raf.close()
+    }
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
@@ -455,10 +458,9 @@ class TailPartitionReader(p: TailInputPartition) extends PartitionReader[Interna
           if (d.checksum == null) null else d.checksum.longValue()))
       }
     case _ =>
-      // text: records end at '\n'; a trailing partial line is still emitted
-      // (record-atomic-append assumption ⇒ only happens at a flush boundary
-      // the producer itself wrote without a newline). Chunk-scanned: lines
-      // assemble across chunk boundaries, memory = one chunk + one record.
+      // text: records end at '\n', and so does every range the driver cut,
+      // so every line is whole. Chunk-scanned: lines assemble across chunk
+      // boundaries, memory = one chunk + one record.
       openStream()
       new Iterator[InternalRow] {
         private val chunk = new Array[Byte](64 << 10)
@@ -475,18 +477,16 @@ class TailPartitionReader(p: TailInputPartition) extends PartitionReader[Interna
         override def next(): InternalRow = {
           val line = new java.io.ByteArrayOutputStream(256)
           var done = false
-          var terminated = false
           while (!done) {
             ensure()
-            if (chunkPos >= chunkLen) done = true // end of range: partial line
+            if (chunkPos >= chunkLen) done = true // end of range
             else {
               var i = chunkPos
               while (i < chunkLen && chunk(i) != '\n') i += 1
               line.write(chunk, chunkPos, i - chunkPos)
               consumed += i - chunkPos
-              if (i < chunkLen) {
-                consumed += 1; chunkPos = i + 1; done = true; terminated = true
-              } else chunkPos = i
+              if (i < chunkLen) { consumed += 1; chunkPos = i + 1; done = true }
+              else chunkPos = i
             }
           }
           // a CRLF line ending drops its '\r' too, as the replay readers
@@ -494,7 +494,7 @@ class TailPartitionReader(p: TailInputPartition) extends PartitionReader[Interna
           val bytes = line.toByteArray
           val n = bytes.length
           val value =
-            if (terminated && n > 0 && bytes(n - 1) == '\r') java.util.Arrays.copyOf(bytes, n - 1)
+            if (n > 0 && bytes(n - 1) == '\r') java.util.Arrays.copyOf(bytes, n - 1)
             else bytes
           new GenericInternalRow(Array[Any](
             pathUtf8, p.startOff + consumed, null, value, null, null))

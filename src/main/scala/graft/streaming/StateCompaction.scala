@@ -88,10 +88,7 @@ object StateCompaction {
       targetFileBytes: Long = DefaultTargetFileBytes,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         identity): Unit = {
-    val fs0 = fileSystem(spark, dir)
-    val dirPath = new Path(dir)
-    if (!fs0.exists(dirPath)) return
-    if (!fs0.listStatus(dirPath).exists(_.isDirectory)) return
+    if (!holdsEpochs(spark, dir, key)) return
     {
       // partition discovery surfaces <key> (and any nested partition
       // cols); drop the epoch key, keep the data partition cols for the
@@ -152,6 +149,19 @@ object StateCompaction {
       (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
         .parquet(s"$stagingTarget/$key=-1")
     }
+  }
+
+  /** True when `dir`, once any torn swap of it is finished, holds an epoch
+    * directory `<key>=<n>` — data a compact can fold and apply tombstones
+    * to. A store compact runs only over such data, because retiring
+    * tombstones with nothing to apply them to would serve ids deleted
+    * before the store's first append once they are appended. */
+  def holdsEpochs(spark: SparkSession, dir: String, key: String): Boolean = {
+    recover(spark, dir)
+    val fs = fileSystem(spark, dir)
+    val p = new Path(dir)
+    fs.exists(p) && fs.listStatus(p).exists(st =>
+      st.isDirectory && st.getPath.getName.startsWith(s"$key="))
   }
 
   /** The swap protocol with the compacted WRITE as a hook — for at-rest

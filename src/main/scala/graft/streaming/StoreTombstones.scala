@@ -146,7 +146,8 @@ object StoreTombstones {
     mask(df, ids(df.sparkSession, Seq(kind -> root), key), key)
 
   /** Delete the whole tombstone store under `root`, reservations
-    * included — called once the store's compact has applied it. */
+    * included — called once the store's compact has applied it, which
+    * needs data to apply it to ([[StateCompaction.holdsEpochs]]). */
   def retire(spark: SparkSession, root: String): Unit = {
     val d = dir(root)
     fs(spark, d).delete(d, true)

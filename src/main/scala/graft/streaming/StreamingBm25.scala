@@ -192,16 +192,10 @@ object StreamingBm25 {
       idCol: String = "doc_id"): Unit = {
     val postingsDir = s"$path/postings"
     MaintenanceLease.withLease(spark, path, op = "compact") { fence =>
-      // finish torn swaps FIRST — a rebucket/legacy crash can leave the
-      // postings only in a staging sibling, which must promote before the
-      // existence check below can see it
-      StateCompaction.recover(spark, postingsDir)
+      // finish a torn root swap first; holdsEpochs finishes a torn
+      // postings swap (rebucket) before it looks for epochs
       StateCompaction.recover(spark, path)
-      // ids deleted BEFORE any append must keep masking future appends:
-      // with no postings there is nothing to apply them to, so leave the
-      // store (tombstones included) untouched rather than swap them away
-      if (!hadoopFs(spark, path).exists(new org.apache.hadoop.fs.Path(postingsDir)))
-        ()
+      if (!StateCompaction.holdsEpochs(spark, postingsDir, "epoch")) ()
       else StateCompaction.compactWith(spark, path, fence) { staging =>
         val nb = storedNBuckets(spark, path)
         val ts = StoreTombstones.ids(spark, Seq("bm25" -> path), idCol)

@@ -383,12 +383,14 @@ object StreamingCuration {
       // between swaps leaves the tombstones intact, reads keep masking,
       // and the re-run re-applies (an anti-join of already-gone rows is
       // a no-op) before the clear — adjudicated in PLANS.md
-      Seq("digests" -> "id", "sigs" -> "id", "verdicts" -> idCol).foreach {
-        case (sub, kc) =>
+      val subs = Seq("digests" -> "id", "sigs" -> "id", "verdicts" -> idCol)
+      if (subs.exists(s => StateCompaction.holdsEpochs(spark, s"$stateDir/${s._1}", "batch"))) {
+        subs.foreach { case (sub, kc) =>
           StateCompaction.compact(spark, s"$stateDir/$sub", key = "batch",
             transform = StoreTombstones.mask(_, "curation", stateDir, kc),
             fence = fence)
+        }
+        StoreTombstones.retire(spark, stateDir)
       }
-      StoreTombstones.retire(spark, stateDir)
     }
 }

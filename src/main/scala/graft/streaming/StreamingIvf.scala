@@ -114,10 +114,12 @@ object StreamingIvf {
       // finish a torn REFIT swap first (it swaps the store root this
       // subdir swap lives under)
       StateCompaction.recover(spark, path)
-      StateCompaction.compact(spark, s"$path/corpus", key = "epoch",
-        partitionCols = Seq("cell"), targetFileBytes = targetFileBytes,
-        transform = StoreTombstones.mask(_, "ivf", path, idCol), fence = fence)
-      StoreTombstones.retire(spark, path)
+      if (StateCompaction.holdsEpochs(spark, s"$path/corpus", "epoch")) {
+        StateCompaction.compact(spark, s"$path/corpus", key = "epoch",
+          partitionCols = Seq("cell"), targetFileBytes = targetFileBytes,
+          transform = StoreTombstones.mask(_, "ivf", path, idCol), fence = fence)
+        StoreTombstones.retire(spark, path)
+      }
     }
 
   /** REFIT — the answer to centroid drift that the per-epoch append

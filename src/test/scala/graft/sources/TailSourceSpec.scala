@@ -149,8 +149,79 @@ class TailSourceSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  private var drains = 0
+
+  /** Appends each of `writes` to one file in turn and drains a graft-tail
+    * stream of `format` after each; returns the values delivered so far
+    * after each drain, sorted. */
+  private def drainAfterEach(format: String, writes: Seq[Array[Byte]],
+      options: (String, String)*): Seq[List[String]] = {
+    val dir = tempDir()
+    val f = Files.write(dir.resolve("app.log"), Array.emptyByteArray)
+    drains += 1
+    val name = s"tail_steps_$drains"
+    val q = spark.readStream.format("graft-tail")
+      .option("path", dir.toString).option("format", format).options(options.toMap)
+      .load()
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", tempDir().toString)
+      .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+    try writes.map { w =>
+      Files.write(f, w, StandardOpenOption.APPEND)
+      q.processAllAvailable()
+      spark.table(name).collect()
+        .map(r => new String(r.getAs[Array[Byte]]("value"), "ISO-8859-1")).toList.sorted
+    } finally q.stop()
+  }
+
+  private def ascii(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
+
+  private def frame(m: String): Array[Byte] =
+    ThriftLogCodec.encodeFrame(null, ascii(m), Some(m.length.toLong), None)
+
+  private val startRegex = "messageStartRegex" -> "^I[0-9]{5}"
+
+  test("text: a torn append waits for the rest of its line, which is delivered once and whole") {
+    assert(drainAfterEach("text", Seq("a1\na2\nhal", "f\na3\n").map(ascii)) ==
+      Seq(List("a1", "a2"), List("a1", "a2", "a3", "half")))
+  }
+
+  test("thrift: a torn append waits for the rest of its frame, which is delivered once and whole") {
+    // cut inside the third frame's length header, then inside its body
+    val f3 = frame("m3")
+    assert(drainAfterEach("thrift", Seq(frame("m1") ++ frame("m2") ++ f3.take(2),
+        f3.slice(2, 9), f3.drop(9) ++ frame("m4"))) ==
+      Seq(List("m1", "m2"), List("m1", "m2"), List("m1", "m2", "m3", "m4")))
+  }
+
+  test("multiline: a torn append waits for the next start line, and each record is delivered once and whole") {
+    assert(drainAfterEach("multiline",
+        Seq("I00001 a\n  cont\nI000", "02 b\n  co", "nt\nI00003 c\n").map(ascii), startRegex) ==
+      Seq(Nil, List("I00001 a\n  cont"), List("I00001 a\n  cont", "I00002 b\n  cont")))
+  }
+
+  private val budget = "maxBytesPerTrigger" -> "64"
+  private val big = "x" * 200
+
+  test("text: a line longer than maxBytesPerTrigger is delivered whole once its \\n lands") {
+    val ys = "y" * 100
+    assert(drainAfterEach("text", Seq(s"short\n$ys", s"$ys\nnext\n").map(ascii), budget) ==
+      Seq(List("short"), List("next", "short", ys + ys)))
+  }
+
+  test("thrift: a frame larger than maxBytesPerTrigger is delivered whole") {
+    assert(drainAfterEach("thrift", Seq(frame("m1") ++ frame(big) ++ frame("m3")), budget) ==
+      Seq(List("m1", "m3", big)))
+  }
+
+  test("multiline: a record larger than maxBytesPerTrigger is delivered whole") {
+    assert(drainAfterEach("multiline",
+        Seq(s"I00001 a\nI00002 $big\nI00003 c\n", "I00004 d\n").map(ascii), budget, startRegex) ==
+      Seq(List("I00001 a", s"I00002 $big"), List("I00001 a", s"I00002 $big", "I00003 c")))
+  }
+
   test("multiline alignment reads O(tail chunk), not O(new bytes)") {
-    import graft.sources.v2.MultilineAlign
+    import graft.sources.v2.RecordAlign
     val p = java.util.regex.Pattern.compile("^REC", java.util.regex.Pattern.MULTILINE)
     // an 8 MB appended window of complete records, ~40 bytes each
     val rec = "REC " + ("x" * 35) + "\n"
@@ -161,7 +232,7 @@ class TailSourceSpec extends AnyFunSuite with SparkTestBase {
       bytesRead += hi - lo
       java.util.Arrays.copyOfRange(window, lo.toInt, hi.toInt)
     }
-    val boundary = MultilineAlign.lastStartBoundary(p, 0L, window.length.toLong, readRange)
+    val boundary = RecordAlign.lastStartBoundary(p, 0L, window.length.toLong, readRange)
     // the last record start is the final REC line
     assert(boundary == (n - 1).toLong * rec.length, s"boundary $boundary")
     // driver IO is one 256 KB tail chunk, NOT the 8 MB window
@@ -171,13 +242,13 @@ class TailSourceSpec extends AnyFunSuite with SparkTestBase {
     // backward and still finds it
     bytesRead = 0L
     val sparse = ("REC head\n" + ("cont line\n" * 200000)).getBytes("ISO-8859-1")
-    val b2 = MultilineAlign.lastStartBoundary(p, 0L, sparse.length.toLong, readRange2(sparse,
+    val b2 = RecordAlign.lastStartBoundary(p, 0L, sparse.length.toLong, readRange2(sparse,
       add = d => bytesRead += d))
     assert(b2 == 0L) // match at offset 0 is the old boundary — no progress
     // a start appended mid-window is found even when outside the first chunk
     val mid = ("REC head\n" + ("cont\n" * 300000) + "REC mid\n" + ("cont\n" * 300000))
       .getBytes("ISO-8859-1")
-    val b3 = MultilineAlign.lastStartBoundary(p, 0L, mid.length.toLong, readRange2(mid, _ => ()))
+    val b3 = RecordAlign.lastStartBoundary(p, 0L, mid.length.toLong, readRange2(mid, _ => ()))
     assert(b3 == "REC head\n".length + 5L * 300000)
   }
 

@@ -76,6 +76,65 @@ class StoreTombstonesSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** Forget id 3 in an empty `kind` store, compact it, then append ids
+    * 0-5: a compact with no data to apply the tombstone to must keep it,
+    * so the store never serves 3. `appendAndServe` appends and returns the
+    * ids the store's own read serves. */
+  private def deleteCompactAppend(kind: String, compact: String => Unit)(
+      appendAndServe: String => Set[Long]): Unit = {
+    val r = root(s"$kind-early")
+    assert(ForgetTool.forget(spark, kind, r, Seq(3L)) == 0L)
+    compact(r)
+    assert(!StoreTombstones.retired(spark, r),
+      s"$kind: a compact with no data to apply them to must keep the tombstones")
+    assert(appendAndServe(r) == Set(0L, 1L, 2L, 4L, 5L))
+  }
+
+  private val early = (0L until 6L)
+
+  test("ivf: an id deleted before the first append stays masked through a compact") {
+    import spark.implicits._
+    deleteCompactAppend("ivf", StreamingIvf.compact(spark, _)) { r =>
+      val rows = early.map(i => (i, Seq(i.toFloat + 1f, 1f))).toDF("vec_id", "embedding")
+      StreamingIvf.init(rows.filter($"vec_id" < 2).select($"vec_id".cast("int")
+        .as("centroid_id"), $"embedding".as("centroid_vec")), r)
+      StreamingIvf.appendEpoch(rows, r, 0L)
+      // a probe id outside the corpus: search never returns the probe itself
+      StreamingIvf.search(spark, r, rows.filter($"vec_id" === 0L)
+          .withColumn("vec_id", org.apache.spark.sql.functions.lit(100L)), k = 10, nProbe = 2)
+        .select("corpus_id").as[Long].collect().toSet
+    }
+  }
+
+  test("bm25: an id deleted before the first append stays masked through a compact") {
+    import spark.implicits._
+    deleteCompactAppend("bm25", StreamingBm25.compact(spark, _)) { r =>
+      StreamingBm25.appendEpoch(early.map(i => (i, "spark probe")).toDF("doc_id", "text"),
+        r, 0L, nBuckets = 4)
+      StreamingBm25.search(spark, r, Seq((100L, "spark")).toDF("query_id", "text"),
+        k = 10, nBuckets = 4).select("doc_id").as[Long].collect().toSet
+    }
+  }
+
+  test("packed: an id deleted before the first append stays masked through a compact") {
+    import spark.implicits._
+    deleteCompactAppend("packed", graft.sources.PackedCorpus.compact(spark, _)) { r =>
+      graft.sources.PackedCorpus.writeEpoch(
+        early.map(i => (i, Seq(i.toInt))).toDF("doc_id", "token_ids").coalesce(1), r, 0L)
+      graft.sources.PackedCorpus.readAll(spark, r).select("doc_id").as[Long].collect().toSet
+    }
+  }
+
+  test("curation: an id deleted before the first append stays masked through a compact") {
+    import spark.implicits._
+    deleteCompactAppend("curation", StreamingCuration.compactState(spark, _)) { r =>
+      // the verdict relation StreamingCuration.run writes for batch 0
+      early.map(i => (i, "kept", 0L)).toDF("doc_id", "stage", "shard")
+        .write.parquet(s"$r/verdicts/batch=0")
+      StreamingCuration.verdicts(spark, r).select("doc_id").as[Long].collect().toSet
+    }
+  }
+
   test("packed: a plain-written tombstone directory masks readAll, and compact retires it") {
     import spark.implicits._
     val dir = root("packed-read")
