@@ -191,15 +191,17 @@ object LogSources {
   /** Source per config spec, batch or streaming. `tailMode` streams with
     * the `graft-tail` DSv2 source (growing files, intra-file offsets);
     * multiline tail emits a record once its successor starts (the
-    * reference's partial-record buffering semantics). */
+    * reference's partial-record buffering semantics); `splitRanges = false`
+    * keeps each file's new bytes in one tail partition, in file order. */
   def fromSpec(spark: SparkSession, dir: String, spec: ReaderSpec, streaming: Boolean,
       maxFilesPerTrigger: Option[Int] = None, tailMode: Boolean = false,
       fileRegex: Option[String] = None,
-      retentionSeconds: Option[Long] = None): DataFrame = {
+      retentionSeconds: Option[Long] = None, splitRanges: Boolean = true): DataFrame = {
     val fre = fileRegex.filterNot(_ == ".*")
     def tail(fmt: String) = {
       val r = spark.readStream.format("graft-tail")
         .option("path", dir).option("format", fmt)
+        .option("splitRanges", splitRanges.toString)
       fre.foreach(re => r.option("fileRegex", re))
       retentionSeconds.foreach(s => r.option("retentionSeconds", s.toString))
       r

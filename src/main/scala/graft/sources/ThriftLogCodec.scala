@@ -100,11 +100,20 @@ object ThriftLogCodec {
   /** The file-absolute end of every WHOLE frame in `rangeLen` bytes of a
     * stream positioned at byte `startOffset`, oversize and malformed frames
     * included — the record boundaries graft-tail commits at. Bodies are
-    * skipped unread. */
+    * skipped unread. A negative length header is corruption, never a torn
+    * append (all four of its bytes are there): it throws
+    * [[CorruptFrameException]] rather than ending the walk, which would
+    * stall the file at that header forever. */
   def frameEnds(in: DataInputStream, startOffset: Long, rangeLen: Long): Iterator[Long] = {
     val input = streamInput(in, startOffset, rangeLen)
-    frames(input).map { len => input.skip(len); input.offset }
+    frames(input, off => throw new CorruptFrameException(off)).map { len =>
+      input.skip(len); input.offset
+    }
   }
+
+  /** A frame header at file offset `offset` holds a negative length. */
+  class CorruptFrameException(val offset: Long)
+      extends java.io.IOException(s"corrupt thrift frame header at byte $offset: negative length")
 
   /** What the frame loop reads: an in-memory buffer (frames decode in
     * place, uncopied) or a bounded stream. */
@@ -133,10 +142,13 @@ object ThriftLogCodec {
   }
 
   /** The one frame loop: the body length of each WHOLE frame, read from its
-    * header, stopping at a partial or corrupt tail. The caller consumes the
-    * body before asking for the next frame. */
-  private def frames(in: FrameInput): Iterator[Int] =
-    Iterator.continually(if (in.remaining >= 4) in.readInt() else -1)
+    * header, stopping at a partial tail or at a negative length header,
+    * whose offset goes to `onCorrupt` first. The caller consumes the body
+    * before asking for the next frame. */
+  private def frames(in: FrameInput, onCorrupt: Long => Unit = _ => ()): Iterator[Int] =
+    Iterator.continually(
+      if (in.remaining < 4) -1
+      else { val len = in.readInt(); if (len < 0) onCorrupt(in.offset - 4); len })
       .takeWhile(len => len >= 0 && len <= in.remaining)
 
   /** Decoded messages: an oversize frame is skipped, and a malformed

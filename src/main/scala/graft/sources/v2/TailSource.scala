@@ -6,6 +6,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -38,7 +39,10 @@ import graft.sources.{LogSources, ThriftLogCodec}
   * `maxBytesPerTrigger` (rate limit, reference `batchSize` analog);
   * `messageStartRegex` and `maxMessageChars` for `multiline`;
   * `maxMessageBytes` (the thrift oversize drop, default 1 MiB — what
-  * `reader.thrift.maxMessageSize` sets through `LogSources.fromSpec`).
+  * `reader.thrift.maxMessageSize` sets through `LogSources.fromSpec`);
+  * `splitRanges` (default true; `false` plans each file's range as one
+  * partition, read in file order — what `LogPipeline.start` sets for the
+  * Kafka and Pulsar writers).
   *
   * Record boundaries: every committed range ends at the last WHOLE record
   * ([[RecordAlign]]), as the reference persists the `nextPosition` of the
@@ -50,11 +54,23 @@ import graft.sources.{LogSources, ThriftLogCodec}
   * keeps it. Rotation renames never copy-truncate; a shrunken file is
   * treated as rotated: its tail restarts from 0.
   *
-  * Scale: listing is O(files) on the driver per trigger; decode runs in
-  * executors, one task per (file, range) — ranges of distinct files run in
-  * parallel. At 100 TB/day the per-trigger work is bounded by
-  * `maxBytesPerTrigger`, and file count per directory is bounded by
-  * rotation retention (reference: logRetentionInSeconds).
+  * Splits: each file's committed range is planned as one or more input
+  * partitions, cut at record boundaries into pieces of Spark's file-split
+  * size (`spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
+  * `minPartitionNum`, as for a file scan), so a two-file backlog decodes on
+  * every core. Thrift cuts come from the frame ends the driver's boundary
+  * walk already visits; text and multiline cuts from the bounded backward
+  * scan. Ordering: within one trigger, several tasks may then write the
+  * records of one file, so their order across the pieces is lost. Writers
+  * that keep a file's order in a sink partition (Kafka, Pulsar, as the
+  * reference shipper reads a file sequentially) set `splitRanges=false`.
+  * At-least-once delivery and the audit Σ are the same either way.
+  *
+  * Scale: listing is O(files) on the driver per trigger, and the thrift
+  * boundary walk reads the new frames' headers there too; decode runs in
+  * executors, one task per piece. At 100 TB/day the per-trigger work is
+  * bounded by `maxBytesPerTrigger`, and file count per directory is
+  * bounded by rotation retention (reference: logRetentionInSeconds).
   */
 class TailSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-tail"
@@ -89,7 +105,8 @@ class TailTable(properties: Map[String, String]) extends Table with SupportsRead
         Option(options.get("fileregex")),
         Option(options.get("maxmessagechars")).map(_.toInt).getOrElse(1 << 20),
         Option(options.get("retentionseconds")).map(_.toLong),
-        Option(options.get("maxmessagebytes")).map(_.toInt).getOrElse(1 << 20))
+        Option(options.get("maxmessagebytes")).map(_.toInt).getOrElse(1 << 20),
+        Option(options.get("splitranges")).forall(_.toBoolean))
     }
 }
 
@@ -97,11 +114,12 @@ class TailScan(dir: String, format: String, maxBytesPerTrigger: Option[Long],
     startRegex: Option[String], fileRegex: Option[String] = None,
     maxMessageChars: Int = 1 << 20,
     retentionSeconds: Option[Long] = None,
-    maxMessageBytes: Int = 1 << 20) extends Scan {
+    maxMessageBytes: Int = 1 << 20,
+    splitRanges: Boolean = true) extends Scan {
   override def readSchema(): StructType = TailSource.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new TailMicroBatchStream(dir, format, maxBytesPerTrigger, startRegex, fileRegex,
-      maxMessageChars, retentionSeconds, maxMessageBytes)
+      maxMessageChars, retentionSeconds, maxMessageBytes, splitRanges)
 }
 
 /** Rotation retention — the reference's `logRetentionInSeconds` cleanup
@@ -230,13 +248,54 @@ private[sources] object RecordAlign {
 
   private def latin1(bytes: Array[Byte]): String =
     new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  /** The ends of the pieces a committed range `[startOff, endOff)` splits
+    * into: each piece ends where `rangeEnd(lo, lo + splitBytes)` puts the
+    * range that starts at `lo` (a [[rangeEnd]] over the format's
+    * boundaries), the last one at `endOff`. A piece whose record runs past
+    * `endOff` is folded into the last. */
+  def pieceEnds(startOff: Long, endOff: Long, splitBytes: Long,
+      rangeEnd: (Long, Long) => Long): Seq[Long] = {
+    val out = Seq.newBuilder[Long]
+    var lo = startOff
+    while (lo < endOff) {
+      val cut = if (endOff - lo <= splitBytes) endOff else rangeEnd(lo, lo + splitBytes)
+      lo = if (cut > lo && cut < endOff) cut else endOff
+      out += lo
+    }
+    out.result()
+  }
+
+  /** Spark's file-split size (`FilePartition.maxSplitBytes`) for ranges of
+    * `sizes` bytes: `min(maxPartitionBytes, max(openCostInBytes, total /
+    * minPartitionNum))`, each range counted with one open cost, and
+    * `minPartitionNum` defaulting to the leaf-node parallelism. */
+  def splitBytes(sizes: Seq[Long]): Long = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val minParts = conf.filesMinPartitionNum.getOrElse(
+      Option(conf.getConfString("spark.sql.leafNodeDefaultParallelism", null)).map(_.toInt)
+        .orElse(SparkSession.getActiveSession.map(_.sparkContext.defaultParallelism))
+        .getOrElse(1))
+    val total = sizes.map(_ + openCost).sum
+    math.min(conf.filesMaxPartitionBytes, math.max(openCost, total / math.max(1, minParts)))
+  }
+
+  /** Stride of the thrift cut index: no split is smaller than
+    * `min(maxPartitionBytes, openCostInBytes)`, so frame ends kept this far
+    * apart place every cut within a sixteenth of a split of its target. */
+  def indexStride: Long = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    math.max(1L, math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes) / 16)
+  }
 }
 
 class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Option[Long],
     startRegex: Option[String] = None, fileRegex: Option[String] = None,
     maxMessageChars: Int = 1 << 20,
     retentionSeconds: Option[Long] = None,
-    maxMessageBytes: Int = 1 << 20)
+    maxMessageBytes: Int = 1 << 20,
+    splitRanges: Boolean = true)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   @transient private lazy val startPattern =
@@ -276,6 +335,12 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
   override def reportLatestOffset(): Offset =
     TailOffset(listFiles().map { case (id, _, len) => id -> len }.toMap)
 
+  /** The thrift cut index of the last [[latestOffset]] walk: for each
+    * (file identity, range start), the range end and the frame ends at
+    * least [[RecordAlign.indexStride]] apart inside it. Replaced on every
+    * call; [[planInputPartitions]] cuts thrift ranges from it. */
+  @volatile private var frameIndex = Map.empty[(String, Long), FrameWalk]
+
   /** Rate-limited head: the returned offset IS what gets committed, so the
     * per-trigger byte budget must be applied here, not at planning time —
     * otherwise capped-away bytes would be skipped forever. Each file's
@@ -286,6 +351,8 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
     val s = start.asInstanceOf[TailOffset].files
     var budget = maxBytesPerTrigger.getOrElse(Long.MaxValue)
     val out = Map.newBuilder[String, Long]
+    val index = Map.newBuilder[(String, Long), FrameWalk]
+    val stride = RecordAlign.indexStride
     listFiles().foreach { case (id, path, len) =>
       val startOff = s.get(id) match {
         case Some(off) if off <= len => off
@@ -293,68 +360,111 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
         case None => 0L
       }
       val take = math.min(len - startOff, budget).max(0L)
-      val end = if (take == 0L) startOff else recordEnd(path, startOff, startOff + take, len)
+      val end =
+        if (take == 0L) startOff
+        else if (format == "thrift") {
+          val walk = walkFrames(path, startOff, startOff + take, len, stride)
+          index += (id, startOff) -> walk
+          walk.end
+        } else withReader(path)(RecordAlign.rangeEnd(boundary, startOff, startOff + take, len, _))
       budget -= end - startOff
       out += id -> end
     }
+    frameIndex = index.result()
     TailOffset(out.result())
   }
 
-  /** [[RecordAlign.rangeEnd]] for this stream's format. Thrift walks the
-    * frame headers of `[startOff, cappedEnd]` (further only for a frame
-    * larger than the budget) through [[ThriftLogCodec.frameEnds]]; text
-    * and multiline read one tail chunk. */
-  private def recordEnd(path: String, startOff: Long, cappedEnd: Long, fileLen: Long): Long =
-    if (format == "thrift") {
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        new java.io.FileInputStream(path), TailPartitionReader.BufferBytes))
-      try {
-        in.skipNBytes(startOff)
-        RecordAlign.rangeEnd(ThriftLogCodec.frameEnds(in, startOff, fileLen - startOff),
-          startOff, cappedEnd)
-      } finally in.close()
-    } else {
-      val pattern =
-        if (format != "multiline") RecordAlign.LineBoundary
-        else startPattern.getOrElse(throw new IllegalArgumentException(
-          "format=multiline requires option messageStartRegex"))
-      val raf = new RandomAccessFile(path, "r")
-      try RecordAlign.rangeEnd(pattern, startOff, cappedEnd, fileLen, (lo, hi) => {
-        val buf = new Array[Byte]((hi - lo).toInt)
-        raf.seek(lo)
-        raf.readFully(buf)
-        buf
-      })
-      finally raf.close()
-    }
+  /** [[RecordAlign.rangeEnd]] over the thrift frame ends of `[startOff,
+    * cappedEnd]` (further only for a frame larger than the budget), read
+    * through [[ThriftLogCodec.frameEnds]], keeping the ends `stride` apart
+    * as the range's cut index. A corrupt frame header fails the trigger
+    * with the file and offset. */
+  private def walkFrames(path: String, startOff: Long, cappedEnd: Long, fileLen: Long,
+      stride: Long): FrameWalk = {
+    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+      new java.io.FileInputStream(path), TailPartitionReader.BufferBytes))
+    try {
+      in.skipNBytes(startOff)
+      val kept = Array.newBuilder[Long]
+      var last = startOff
+      val ends = ThriftLogCodec.frameEnds(in, startOff, fileLen - startOff).map { e =>
+        if (e - last >= stride) { kept += e; last = e }
+        e
+      }
+      val end = RecordAlign.rangeEnd(ends, startOff, cappedEnd)
+      FrameWalk(end, kept.result().filter(_ < end))
+    } catch {
+      case e: ThriftLogCodec.CorruptFrameException =>
+        throw new java.io.IOException(s"graft-tail: $path: ${e.getMessage}", e)
+    } finally in.close()
+  }
+
+  /** Text and multiline boundaries: after each `\n`, or at each
+    * `messageStartRegex` match. */
+  private def boundary: java.util.regex.Pattern =
+    if (format != "multiline") RecordAlign.LineBoundary
+    else startPattern.getOrElse(throw new IllegalArgumentException(
+      "format=multiline requires option messageStartRegex"))
+
+  /** Runs `body` with a positioned reader of `path`'s byte ranges. */
+  private def withReader[T](path: String)(body: ((Long, Long) => Array[Byte]) => T): T = {
+    val raf = new RandomAccessFile(path, "r")
+    try body { (lo, hi) =>
+      val buf = new Array[Byte]((hi - lo).toInt)
+      raf.seek(lo)
+      raf.readFully(buf)
+      buf
+    } finally raf.close()
+  }
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
+  /** Each file's committed range, cut at record boundaries into pieces of
+    * Spark's file-split size ([[RecordAlign.splitBytes]]), one input
+    * partition per piece: thrift cuts come from the [[latestOffset]] walk's
+    * cut index (a range it did not walk, as after a restart, is walked
+    * again), text and multiline cuts from the bounded backward scan. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[TailOffset].files
     val e = end.asInstanceOf[TailOffset].files
     // offsets are keyed by file identity; resolve identities back to their
     // CURRENT paths (a file may have been renamed since the offset was cut)
     val idToPath = listFiles().map { case (id, path, _) => id -> path }.toMap
-    val parts = Array.newBuilder[InputPartition]
-    e.toSeq.sortBy(_._1).foreach { case (id, endOff) =>
+    val ranges = e.toSeq.sortBy(_._1).flatMap { case (id, endOff) =>
       val startOff = s.get(id) match {
         case Some(off) if off <= endOff => off
         case Some(_) => 0L
         case None => 0L
       }
       // identity vanished from the directory (deleted/moved out): skip
-      idToPath.get(id).foreach { path =>
-        if (endOff > startOff) {
-          parts += TailInputPartition(path, startOff, endOff, format, startRegex,
-            maxMessageChars, maxMessageBytes)
-        }
-      }
+      idToPath.get(id).filter(_ => endOff > startOff).map(path => (id, path, startOff, endOff))
     }
-    parts.result()
+    val split = RecordAlign.splitBytes(ranges.map { case (_, _, lo, hi) => hi - lo })
+    val index = frameIndex
+    ranges.flatMap { case (id, path, startOff, endOff) =>
+      val ends =
+        if (!splitRanges || endOff - startOff <= split) Seq(endOff)
+        else if (format == "thrift") {
+          val cuts = index.get((id, startOff)) match {
+            case Some(walk) if walk.end >= endOff => walk.cuts
+            case _ => // not walked by this stream, as a batch replayed after a restart
+              val len = math.min(endOff, new java.io.File(path).length)
+              if (len > startOff) walkFrames(path, startOff, len, len, RecordAlign.indexStride).cuts
+              else Array.emptyLongArray
+          }
+          RecordAlign.pieceEnds(startOff, endOff, split,
+            (lo, cap) => RecordAlign.rangeEnd(cuts.iterator.filter(_ > lo), lo, cap))
+        } else withReader(path) { read =>
+          RecordAlign.pieceEnds(startOff, endOff, split,
+            (lo, cap) => RecordAlign.rangeEnd(boundary, lo, cap, endOff, read))
+        }
+      (startOff +: ends).zip(ends).map { case (lo, hi) =>
+        TailInputPartition(path, lo, hi, format, startRegex, maxMessageChars, maxMessageBytes)
+      }
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new TailReaderFactory
@@ -384,6 +494,9 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
   override def deserializeOffset(json: String): Offset = TailOffset.fromJson(json)
   override def stop(): Unit = ()
 }
+
+/** A thrift range's end and its cut index (see `frameIndex`). */
+private case class FrameWalk(end: Long, cuts: Array[Long])
 
 case class TailInputPartition(path: String, startOff: Long, endOff: Long, format: String,
     startRegex: Option[String] = None, maxMessageChars: Int = 1 << 20,

@@ -2,6 +2,11 @@ package graft.streaming
 
 import java.net.InetAddress
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -105,11 +110,13 @@ object LogPipeline {
     * previous cache()+count() shape ran two jobs per epoch and pinned the
     * whole epoch in block-manager memory — an OOM/spill hazard once an epoch
     * is tens of GB per executor. */
-  private[streaming] def writeBatch(df: DataFrame, cfg: PipelineConfig, batchId: Long = 0L): Long = {
+  private[streaming] def writeBatch(df: DataFrame, cfg: PipelineConfig, batchId: Long = 0L,
+      replay: Boolean = false): Long = {
     cfg.writer match {
       case WriterSpec.RolledObjects(baseDir, keyFormat, maxBytes) =>
         val sink = new RolledObjectSink(baseDir,
           KeyTemplate(keyFormat, cfg.name), maxBytes)
+        if (replay) sink.removeEpoch(batchId, df.sparkSession.sessionState.newHadoopConf())
         sink.writeEpoch(df, batchId).map(_.records).sum
       case WriterSpec.Files(path, format) =>
         // one overwritten directory per epoch: a retried epoch replaces its
@@ -197,12 +204,27 @@ object LogPipeline {
   def start(spark: SparkSession, cfg: PipelineConfig,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
       audit: Option[AuditWriter] = None): StreamingQuery = {
+    // Kafka and Pulsar keep a file's order in a key-partitioned sink
+    // partition, as the reference shipper reads a file sequentially: their
+    // tail ranges stay whole
+    val ordered = cfg.writer match {
+      case _: WriterSpec.Kafka | _: WriterSpec.Pulsar => true
+      case _ => false
+    }
     val src = LogSources.fromSpec(spark, cfg.logDir, cfg.reader, streaming = true,
       cfg.maxFilesPerTrigger, cfg.tailMode, fileRegex = Some(cfg.logStreamRegex),
-      retentionSeconds = cfg.logRetentionSeconds)
-    val transformed = applyTransforms(src, cfg)
+      retentionSeconds = cfg.logRetentionSeconds, splitRanges = !ordered)
+    // the rolled-object sink writes `value` alone: selected here, in the
+    // streaming plan, the envelope columns are pruned before they are
+    // computed (the frame foreachBatch gets is RDD-backed, past pruning)
+    val rolled = cfg.writer.isInstanceOf[WriterSpec.RolledObjects]
+    val transformed =
+      if (rolled) applyTransforms(src, cfg).select("value") else applyTransforms(src, cfg)
     val checkpoint = cfg.checkpointDir.getOrElse(
       s"/tmp/graft-checkpoints/${cfg.name}")
+    // only a run's first batch can be one replayed from the offset log; its
+    // earlier attempt may have been planned in other partitions
+    var replay = true
     StateStores.withProvider(spark, cfg.stateStoreProvider) {
       transformed.writeStream
         .queryName(cfg.name)
@@ -210,8 +232,9 @@ object LogPipeline {
         .trigger(trigger)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val n = writeBatch(
-            if (batch.columns.contains("topic")) batch
-            else batch.withColumn("topic", lit(cfg.name)), cfg, batchId)
+            if (rolled || batch.columns.contains("topic")) batch
+            else batch.withColumn("topic", lit(cfg.name)), cfg, batchId, replay)
+          replay = false
           audit.foreach(_.record(cfg.name, batchId, n))
           ()
         }
@@ -269,21 +292,38 @@ object LogPipeline {
   }
 }
 
-/** Idempotent per-epoch audit sink: one small parquet file per batchId,
-  * overwritten on epoch retry — Σ num_messages over distinct batchIds equals
+/** Idempotent per-epoch audit sink: one one-row parquet file per batchId,
+  * replaced on epoch retry — Σ num_messages over distinct batchIds equals
   * messages delivered (the e2e oracle of the reference's test strategy,
-  * reference: e2e/SingerEndToEndTest.java:26-121). */
+  * reference: e2e/SingerEndToEndTest.java:26-121). The row is written on
+  * the driver with the parquet writer, not by a Spark job. */
 class AuditWriter(spark: SparkSession, auditDir: String) extends Serializable {
+
+  /** Keyed by (pipeline, batchId) via the directory layout: epoch retries
+    * replace their own record, concurrent pipelines never share a
+    * directory, and both come back as partition columns on read. The row
+    * goes to a hidden temp file (readers skip `.` names), which is renamed
+    * over `part-00000.parquet`; any other parquet file in the directory (an
+    * earlier writer's) is removed. */
   def record(pipeline: String, batchId: Long, numMessages: Long): Unit = {
-    import spark.implicits._
-    // keyed by (pipeline, batchId) via the directory layout: epoch retries
-    // overwrite their own record, concurrent pipelines never share a
-    // directory, and both come back as partition columns on read
-    Seq((numMessages, System.currentTimeMillis(), LogPipeline.hostname))
-      .toDF("num_messages", "timestamp_ms", "hostname")
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$auditDir/pipeline=$pipeline/batch_id=$batchId")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(s"$auditDir/pipeline=$pipeline/batch_id=$batchId")
+    val fs = dir.getFileSystem(conf)
+    val tmp = new Path(dir, s".part-00000-${java.util.UUID.randomUUID()}.parquet")
+    val out = new Path(dir, "part-00000.parquet")
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(AuditWriter.Schema).build()
+    try writer.write(new SimpleGroupFactory(AuditWriter.Schema).newGroup()
+      .append("num_messages", numMessages)
+      .append("timestamp_ms", System.currentTimeMillis())
+      .append("hostname", LogPipeline.hostname))
+    finally writer.close()
+    fs.delete(out, false)
+    if (!fs.rename(tmp, out)) throw new java.io.IOException(s"audit: cannot rename $tmp to $out")
+    fs.listStatus(dir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith(".") &&
+        p.getName != out.getName)
+      .foreach(fs.delete(_, false))
   }
 
   /** Total delivered message count per pipeline (audit oracle). */
@@ -292,4 +332,16 @@ class AuditWriter(spark: SparkSession, auditDir: String) extends Serializable {
       .groupBy("pipeline")
       .agg(sum("num_messages").as("total_messages"),
         count(lit(1)).as("num_batches"))
+}
+
+object AuditWriter {
+  /** The audit row: the types Spark writes for a `(Long, Long, String)`
+    * row, so files written by an earlier Spark job read as the same schema. */
+  val Schema: MessageType =
+    MessageTypeParser.parseMessageType(
+      """message spark_schema {
+        |  required int64 num_messages;
+        |  required int64 timestamp_ms;
+        |  optional binary hostname (STRING);
+        |}""".stripMargin)
 }

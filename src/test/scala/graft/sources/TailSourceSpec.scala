@@ -358,6 +358,165 @@ class TailSourceSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  // ------------------------------------------------ splitting ranges into pieces
+
+  import graft.sources.v2.{TailInputPartition, TailMicroBatchStream, TailOffset, TailPartitionReader}
+  import org.apache.spark.sql.connector.read.streaming.ReadLimit
+
+  /** Runs `body` with Spark's file-split size at `bytes`, and the session
+    * active on this thread (planning reads the split conf through it). */
+  private def withMaxPartitionBytes[T](bytes: Long)(body: => T): T = {
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", bytes)
+    try body finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  private val mlRegex = "^I[0-9]{5}"
+
+  /** Two files of `format` records, about 2 KB each; a multiline file ends
+    * in a start line `I99999`, so its last real record is whole. Returns
+    * the directory. */
+  private def splitFixture(format: String): Path = {
+    val dir = tempDir()
+    Seq("a.log", "b.log").foreach { name =>
+      val bytes = format match {
+        case "text" => ascii((1 to 80).map(i => s"$name-$i " + "x" * (i % 23)).mkString("", "\n", "\n"))
+        case "multiline" => ascii((1 to 50).map(i =>
+          f"I$i%05d $name" + "\n  cont" * (i % 3)).mkString("", "\n", "\nI99999 end\n"))
+        case _ => (1 to 60).map(i => frame(s"$name-$i " + "y" * (i % 29))).reduce(_ ++ _)
+      }
+      Files.write(dir.resolve(name), bytes)
+    }
+    dir
+  }
+
+  private def streamFor(dir: Path, format: String, maxBytes: Option[Long] = None) =
+    new TailMicroBatchStream(dir.toString, format, maxBytes,
+      Option.when(format == "multiline")(mlRegex))
+
+  /** Every record boundary of `file` in `format`, 0 included. */
+  private def boundaries(file: Path, format: String): Set[Long] = {
+    val bytes = Files.readAllBytes(file)
+    format match {
+      case "text" => (0 +: bytes.indices.filter(bytes(_) == '\n').map(_ + 1)).map(_.toLong).toSet
+      case "multiline" =>
+        val m = java.util.regex.Pattern.compile(mlRegex, java.util.regex.Pattern.MULTILINE)
+          .matcher(new String(bytes, "ISO-8859-1"))
+        Iterator.continually(m.find()).takeWhile(identity).map(_ => m.start().toLong).toSet
+      case _ => ThriftLogCodec.decodeFrames(bytes).map(_.nextByteOffset).toSet + 0L
+    }
+  }
+
+  private def read(parts: Seq[TailInputPartition]): Seq[String] = parts.flatMap { p =>
+    val r = new TailPartitionReader(p)
+    try Iterator.continually(r.next()).takeWhile(identity)
+      .map(_ => new String(r.get().getBinary(3), "ISO-8859-1")).toList
+    finally r.close()
+  }
+
+  /** The records of `dir` through the `LogSources` batch reader, sorted,
+    * without the multiline fixture's trailing `I99999` records. */
+  private def batchRecords(dir: Path, format: String): Seq[String] = {
+    val spec = format match {
+      case "text" => graft.model.ReaderSpec.TextLine()
+      case "multiline" => graft.model.ReaderSpec.TextMultiline(mlRegex)
+      case _ => graft.model.ReaderSpec.ThriftFramed()
+    }
+    LogSources.fromSpec(spark, dir.toString, spec, streaming = false)
+      .select(org.apache.spark.sql.functions.col("value").cast("binary")).collect()
+      .map(r => new String(r.getAs[Array[Byte]](0), "ISO-8859-1"))
+      .filterNot(_.startsWith("I99999")).toSeq.sorted
+  }
+
+  private def planAll(stream: TailMicroBatchStream, start: TailOffset): (TailOffset, Seq[TailInputPartition]) = {
+    val end = stream.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[TailOffset]
+    (end, stream.planInputPartitions(start, end).toSeq.map(_.asInstanceOf[TailInputPartition]))
+  }
+
+  Seq("text", "multiline", "thrift").foreach { format =>
+    test(s"$format: a file's range is planned as several partitions, each cut at a record boundary") {
+      val dir = splitFixture(format)
+      withMaxPartitionBytes(256) {
+        val (_, parts) = planAll(streamFor(dir, format), TailOffset(Map.empty))
+        val byFile = parts.groupBy(_.path)
+        assert(byFile.size == 2)
+        byFile.foreach { case (path, ps) =>
+          assert(ps.size >= 2, s"$path planned as ${ps.size} partition(s)")
+          val b = boundaries(java.nio.file.Paths.get(path), format)
+          ps.foreach { p =>
+            assert(b(p.startOff) && b(p.endOff), s"$path piece [${p.startOff}, ${p.endOff})")
+          }
+          // the pieces tile the committed range
+          assert(ps.sortBy(_.startOff).sliding(2).forall(w => w.size < 2 || w(0).endOff == w(1).startOff))
+        }
+        assert(read(parts).sorted == batchRecords(dir, format))
+      }
+    }
+  }
+
+  test("splitRanges=false plans each file's range as one partition") {
+    val dir = splitFixture("thrift")
+    withMaxPartitionBytes(256) {
+      val stream = new TailMicroBatchStream(dir.toString, "thrift", None, splitRanges = false)
+      val (_, parts) = planAll(stream, TailOffset(Map.empty))
+      assert(parts.size == 2)
+      assert(read(parts).sorted == batchRecords(dir, "thrift"))
+    }
+  }
+
+  test("thrift: split pieces under maxBytesPerTrigger deliver every record once") {
+    val dir = splitFixture("thrift")
+    withMaxPartitionBytes(256) {
+      val stream = streamFor(dir, "thrift", Some(900L))
+      var start = TailOffset(Map.empty)
+      var split = false
+      val got = Seq.newBuilder[String]
+      var done = false
+      while (!done) {
+        val (end, parts) = planAll(stream, start)
+        done = end == start
+        split ||= parts.groupBy(_.path).values.exists(_.size >= 2)
+        got ++= read(parts)
+        start = end
+      }
+      assert(split, "no batch split a file's range")
+      assert(got.result().sorted == batchRecords(dir, "thrift"))
+    }
+  }
+
+  test("thrift: a restarted stream plans a WAL-replayed batch without latestOffset, to the same records") {
+    val dir = splitFixture("thrift")
+    withMaxPartitionBytes(256) {
+      val (end, parts) = planAll(streamFor(dir, "thrift"), TailOffset(Map.empty))
+      // a fresh stream never walked the range: it walks it again
+      val replayed = streamFor(dir, "thrift").planInputPartitions(TailOffset(Map.empty), end)
+        .toSeq.map(_.asInstanceOf[TailInputPartition])
+      assert(replayed.size > 2)
+      assert(replayed == parts)
+      assert(read(replayed).sorted == batchRecords(dir, "thrift"))
+    }
+  }
+
+  test("thrift: a negative frame length header fails the trigger, naming the file and offset") {
+    val dir = tempDir()
+    val f = dir.resolve("t.log")
+    val m1 = ThriftLogCodec.encodeFrame(null, ascii("m1"))
+    Files.write(f, m1 ++ Array.fill[Byte](4)(-1) ++ ThriftLogCodec.encodeFrame(null, ascii("m2")))
+    val e = intercept[java.io.IOException] {
+      streamFor(dir, "thrift").latestOffset(TailOffset(Map.empty), ReadLimit.allAvailable())
+    }
+    assert(e.getMessage.contains(f.toString) && e.getMessage.contains(s"byte ${m1.length}"),
+      e.getMessage)
+    val q = spark.readStream.format("graft-tail")
+      .option("path", dir.toString).option("format", "thrift").load()
+      .writeStream.format("memory").queryName("tail_corrupt")
+      .option("checkpointLocation", tempDir().toString).start()
+    try {
+      val qe = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      assert(qe.getMessage.contains(f.toString), qe.getMessage)
+    } finally q.stop()
+  }
+
   test("TailRetention.sweep deletes only fully-ingested old files, never the head") {
     import graft.sources.v2.TailRetention
     val now = 1000000000L

@@ -147,6 +147,104 @@ class LogPipelineSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  test("rolled-object pipeline with the default partitioner, checksum and headers delivers the batch records") {
+    val logDir = tempDir("graft-rov-logs")
+    val outDir = tempDir("graft-rov-out")
+    import graft.sources.ThriftLogCodec
+    Files.write(logDir.resolve("t.log"), (1 to 40).map(i => ThriftLogCodec.encodeFrame(
+      s"k${i % 3}".getBytes, s"msg-${i % 7}".getBytes, Some(i.toLong), None)).reduce(_ ++ _))
+    val cfg = PipelineConfig(
+      name = "rov-test", logDir = logDir.toString,
+      reader = ReaderSpec.ThriftFramed(),
+      partitioner = PartitionerSpec.Default,
+      writer = WriterSpec.RolledObjects(s"file://$outDir", "{{LOGNAME}}/{{UUID}}.log"),
+      checkpointDir = Some(tempDir("graft-rov-cp").toString),
+      computeChecksum = true, injectHeaders = Map("az" -> "test-az"), tailMode = true)
+    val q = LogPipeline.start(spark, cfg, Trigger.ProcessingTime("100 milliseconds"))
+    q.processAllAvailable()
+    q.stop()
+    val delivered = Files.walk(outDir).toArray.map(_.asInstanceOf[Path])
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".log"))
+      .flatMap(p => new String(Files.readAllBytes(p)).split("\n")).toSeq.sorted
+    val batch = LogPipeline.runBatch(spark, cfg).collect()
+      .map(r => new String(r.getAs[Array[Byte]]("value"))).toSeq.sorted
+    assert(batch.size == 40)
+    assert(delivered == batch) // the same multiset, duplicates included
+  }
+
+  test("a batch replayed after a restart in fewer partitions replaces its earlier objects") {
+    import graft.sources.ThriftLogCodec
+    val logDir = tempDir("graft-replay-logs")
+    val outDir = tempDir("graft-replay-out")
+    val cp = tempDir("graft-replay-cp")
+    Seq("a.log", "b.log").foreach(n => Files.write(logDir.resolve(n), (1 to 60).map(i =>
+      ThriftLogCodec.encodeFrame(null, s"$n-$i ${"z" * (i % 17)}".getBytes)).reduce(_ ++ _)))
+    val cfg = PipelineConfig(name = "replay-test", logDir = logDir.toString,
+      reader = ReaderSpec.ThriftFramed(),
+      writer = WriterSpec.RolledObjects(s"file://$outDir", "{{LOGNAME}}/{{UUID}}.log"),
+      checkpointDir = Some(cp.toString), tailMode = true)
+    def objects(): Map[String, Seq[String]] = Files.walk(outDir).toArray.map(_.asInstanceOf[Path])
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".log"))
+      .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p)).split("\n").toSeq)
+      .toMap
+    def drain(): Unit = {
+      val q = LogPipeline.start(spark, cfg, Trigger.ProcessingTime("100 milliseconds"))
+      try q.processAllAvailable() finally q.stop()
+    }
+    // first attempt: small pieces, then batch 0 loses its commit, as when
+    // the agent dies after the sink write
+    spark.conf.set("spark.sql.files.maxPartitionBytes", 512L)
+    try drain() finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    val first = objects()
+    assert(first.size > 2 && first.keys.forall(_.startsWith("0000-")), first.keys)
+    Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(cp.resolve("commits").resolve(f)))
+    // the replay plans one piece per file
+    drain()
+    val second = objects()
+    assert(second.size == 2, second.keys)
+    val records = second.values.flatten.toSeq
+    assert(records.size == 120 && records.distinct.size == 120)
+    assert(records.sorted == first.values.flatten.toSeq.sorted)
+  }
+
+  test("AuditWriter.record writes one row per batch on retry, readable by spark.read.parquet") {
+    val auditDir = tempDir("graft-audit-row")
+    val audit = new AuditWriter(spark, auditDir.toString)
+    audit.record("p1", 5L, 7L)
+    audit.record("p1", 5L, 9L) // the batch retried
+    val rows = spark.read.parquet(auditDir.toString).collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getAs[Long]("num_messages") == 9L)
+    assert(r.getAs[Long]("timestamp_ms") > 0L)
+    assert(r.getAs[String]("hostname") == LogPipeline.hostname)
+    assert(r.getAs[String]("pipeline") == "p1")
+    assert(r.get(r.fieldIndex("batch_id")) == 5)
+    val t = audit.totals().collect().head
+    assert(t.getAs[Long]("total_messages") == 9L && t.getAs[Long]("num_batches") == 1L)
+  }
+
+  test("AuditWriter.totals counts a batch once when its directory holds an older Spark-written file") {
+    import spark.implicits._
+    val auditDir = tempDir("graft-audit-old")
+    // the layout a Spark job wrote audit rows in
+    def sparkWritten(batchId: Long, n: Long): Unit =
+      Seq((n, 1L, "old-host")).toDF("num_messages", "timestamp_ms", "hostname")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$auditDir/pipeline=p/batch_id=$batchId")
+    sparkWritten(1L, 10L)
+    sparkWritten(2L, 20L)
+    val audit = new AuditWriter(spark, auditDir.toString)
+    audit.record("p", 2L, 20L) // batch 2 re-run after the upgrade
+    audit.record("p", 3L, 30L)
+    val t = audit.totals().collect().head
+    assert(t.getAs[Long]("total_messages") == 60L)
+    assert(t.getAs[Long]("num_batches") == 3L)
+    // the older file of the re-run batch is gone, so plain sums agree too
+    assert(spark.read.parquet(auditDir.toString).agg(org.apache.spark.sql.functions.sum("num_messages"))
+      .head().getLong(0) == 60L)
+  }
+
   test("heartbeat listener emits progress JSON") {
     val buf = new BufferingHeartbeat
     val listener = new HeartbeatListener(buf)

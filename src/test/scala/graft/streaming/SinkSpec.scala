@@ -321,4 +321,36 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
       assert(all.map(_.sent.size).sum == 20)
     } finally EpochProducers.factory = saved
   }
+
+  test("a tail pipeline with a Kafka writer sends each file's records from one task, in file order") {
+    import graft.model._
+    val logDir = Files.createTempDirectory("graft-kafka-order")
+    val names = Seq("a.log", "b.log")
+    names.foreach(n => Files.write(logDir.resolve(n), (1 to 60).map(i =>
+      graft.sources.ThriftLogCodec.encodeFrame(null, f"$n-$i%03d".getBytes)).reduce(_ ++ _)))
+    val made = new java.util.concurrent.CopyOnWriteArrayList[FakeProducer]()
+    val saved = EpochProducers.factory
+    EpochProducers.factory = _ => { val p = new FakeProducer(Seq(0 -> Some(100))); made.add(p); p }
+    // small enough that a rolled-object pipeline splits each file
+    spark.conf.set("spark.sql.files.maxPartitionBytes", 256L)
+    try {
+      val cfg = PipelineConfig(name = "kafka-order", logDir = logDir.toString,
+        reader = ReaderSpec.ThriftFramed(), partitioner = PartitionerSpec.Crc32Key(1),
+        writer = WriterSpec.Kafka("fake:9092", "t", transactional = true),
+        checkpointDir = Some(Files.createTempDirectory("graft-kafka-order-cp").toString),
+        tailMode = true)
+      val q = LogPipeline.start(spark, cfg,
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      try q.processAllAvailable() finally q.stop()
+      val sends = made.toArray(Array.empty[FakeProducer]).map(_.sent.map(_._2).toSeq)
+      names.foreach { n =>
+        val from = sends.filter(_.exists(_.startsWith(n)))
+        assert(from.length == 1, s"$n sent by ${from.length} tasks")
+        assert(from.head.filter(_.startsWith(n)) == (1 to 60).map(i => f"$n-$i%03d"))
+      }
+    } finally {
+      EpochProducers.factory = saved
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+  }
 }
