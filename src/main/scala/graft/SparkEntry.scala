@@ -81,7 +81,7 @@ object SparkEntry {
   // multimodal decode), which is where Multimodal.scala applies it.
 
   /** Flagship: the full singer-style ingestion pipeline in batch-replay mode —
-    * documents → LogRecord envelope → filter/transform/prepend → checksum →
+    * documents → key/value envelope → filter/transform/prepend → checksum →
     * partition assignment (reference: SURVEY.md §3.2 hot path). */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"

@@ -60,8 +60,8 @@ object PartitionerSpec {
 
 sealed trait WriterSpec
 object WriterSpec {
-  /** Kafka-schema rows to an actual Kafka sink. `transactional` selects the
-    * per-task transactional epoch commit protocol (reference:
+  /** Kafka sink through the per-task epoch protocol; `transactional` wraps
+    * each task's epoch in a Kafka transaction (reference:
     * `enableTransactions` — writer/KafkaWriter.java:512-516,584-608,
     * writer/kafka/CommittableKafkaWriter.java:147-149,335-356; see
     * [[graft.streaming.TransactionalEpochWriter]]). */

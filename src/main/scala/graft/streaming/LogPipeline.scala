@@ -7,7 +7,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -59,7 +59,7 @@ object LogPipeline {
       case _ => ()
     }
     out = Transforms(out, cfg.transforms, valueCol)
-    // envelope: key/value binary + checksum + headers (LogRecord schema)
+    // envelope: key/value binary + checksum + headers
     if (!out.columns.contains("key")) out = out.withColumn("key", lit(null).cast("binary"))
     out = out.withColumn(valueCol, col(valueCol).cast("binary"))
     if (cfg.computeChecksum) out = Transforms.withChecksum(out, valueCol)
@@ -71,38 +71,6 @@ object LogPipeline {
     applyTransforms(
       LogSources.fromSpec(spark, cfg.logDir, cfg.reader, streaming = false,
         fileRegex = Some(cfg.logStreamRegex)), cfg)
-
-  /** The exact projection handed to the Kafka sink. The Spark Kafka writer
-    * contract takes key/value/topic/partition plus an optional `headers`
-    * column (`array<struct<key:string,value:binary>>`) — the reference
-    * attaches its `_mid`/`_ots` dedup headers to every produced record
-    * (reference: writer/kafka/CommittableKafkaWriter.java:223-236), so the
-    * headers built by [[Transforms.withHeaders]] MUST survive to the sink.
-    * Our headers travel as `map<string,binary>`; Kafka wants the
-    * array-of-struct encoding, converted here. */
-  def kafkaSinkProjection(df: DataFrame): DataFrame = {
-    val base = Seq("key", "value", "partition", "topic").map(col)
-    if (df.columns.contains("headers"))
-      df.select(base :+ transform(map_entries(col("headers")),
-        e => struct(e.getField("key").as("key"), e.getField("value").as("value")))
-        .as("headers"): _*)
-    else df.select(base: _*)
-  }
-
-  /** The Pulsar message projection (reference:
-    * writer/pulsar/PulsarWriter.java:190-210 builds key+value messages;
-    * PulsarMessageRouter.java:40-51 routes by
-    * `partitioner.partition(keyBytes, numPartitions)`). The `partition`
-    * column IS the router output — [[Transforms.withPartition]] applies the
-    * same partitioner family the router would. Headers travel as Pulsar
-    * message properties (string→string). */
-  def pulsarSinkProjection(df: DataFrame): DataFrame = {
-    val base = Seq("key", "value", "partition", "topic").map(col)
-    if (df.columns.contains("headers"))
-      df.select(base :+ transform_values(col("headers"),
-        (_, v) => v.cast("string")).as("properties"): _*)
-    else df.select(base: _*)
-  }
 
   /** Write one epoch's records to the configured sink, returning the record
     * count for the audit side-channel. The count comes from `observe()` —
@@ -124,73 +92,45 @@ object LogPipeline {
         // effectively exactly-once for this sink)
         countedWrite(df)(observed => observed.write.mode("overwrite").format(format)
           .save(s"$path/batch_id=$batchId"))
-      case WriterSpec.Kafka(servers, topic, _, false, _) =>
-        countedWrite(df)(observed => kafkaSinkProjection(observed)
-          .write.format("kafka")
-          .option("kafka.bootstrap.servers", servers)
-          .option("topic", topic)
-          .option("includeHeaders", "true")
-          .save())
-      case WriterSpec.Kafka(servers, topic, _, true, timeoutS) =>
-        // transactional epoch path: each sink TASK runs the reference's
-        // committable protocol against its own producer (a Kafka transaction
-        // is per-producer, so per-task atomicity is the distributed analog —
-        // aborted attempts are invisible to read-committed consumers, and a
-        // retried task re-sends under a fresh transaction; `_mid` headers
-        // keep downstream dedup exact). Producers come from the injectable
-        // EpochProducers seam — no kafka-clients jar ships in this build.
-        countedWrite(df) { observed =>
-          val projected = kafkaSinkProjection(observed)
-            .withColumn("partition", col("partition").cast("int"))
-          val hasHeaders = projected.columns.contains("headers")
-          projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-            val producer = EpochProducers.factory(servers)
-            try {
-              new TransactionalEpochWriter(producer, topic,
-                  transactional = true, writeTimeoutSeconds = timeoutS)
-                .writeEpoch(rows.map { r =>
-                  val hs: Seq[(String, Array[Byte])] =
-                    if (hasHeaders && !r.isNullAt(r.fieldIndex("headers")))
-                      r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("headers"))
-                        .map(h => (h.getString(0), h.getAs[Array[Byte]](1)))
-                    else Nil
-                  EpochRecord(r.getInt(r.fieldIndex("partition")),
-                    r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"), hs)
-                })
-              ()
-            } finally producer.close()
-          }
-        }
+      case WriterSpec.Kafka(servers, topic, _, transactional, timeoutS) =>
+        sendEpoch(df, topic, transactional, timeoutS, () => EpochProducers.factory(servers))
       case WriterSpec.Pulsar(serviceUrl, topic, _, timeoutS) =>
-        // per-task Pulsar batch protocol (sendAsync → flush → await-all;
-        // reference: PulsarWriter.java:190-210) against the injectable
-        // PulsarProducers seam — the default factory throws the
-        // no-client-jar error, so an un-injected run fails with the same
-        // clear message as before
-        countedWrite(df) { observed =>
-          val projected = pulsarSinkProjection(observed)
-            .withColumn("partition", col("partition").cast("int"))
-          val hasProps = projected.columns.contains("properties")
-          projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-            val producer = PulsarProducers.factory(serviceUrl)
-            try {
-              new PulsarEpochWriter(producer, topic, writeTimeoutSeconds = timeoutS)
-                .writeEpoch(rows.map { r =>
-                  val props: Map[String, String] =
-                    if (hasProps && !r.isNullAt(r.fieldIndex("properties")))
-                      r.getMap[String, String](r.fieldIndex("properties")).toMap
-                    else Map.empty
-                  PulsarRecord(r.getInt(r.fieldIndex("partition")),
-                    r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"), props)
-                })
-              ()
-            } finally producer.close()
-          }
-        }
+        // Pulsar producers have no transactions
+        sendEpoch(df, topic, transactional = false, timeoutS,
+          () => EpochProducers.pulsarFactory(serviceUrl))
       case WriterSpec.Noop =>
         df.count()
     }
   }
+
+  /** The message-sink arm (Kafka, Pulsar): each sink task runs one
+    * [[TransactionalEpochWriter]] over its own producer from `newProducer`
+    * (a Kafka transaction is per producer, so a transactional epoch is
+    * atomic per task — aborted attempts are invisible to read-committed
+    * consumers, and a retried task re-sends; `_mid` headers keep
+    * downstream dedup exact). Rows carry `key`, `value`, the `partition`
+    * the writer routes onto the topic's writable partitions, and an
+    * optional `headers` map (`map<string,binary>`). */
+  private def sendEpoch(df: DataFrame, topic: String, transactional: Boolean,
+      timeoutS: Int, newProducer: () => EpochProducer): Long =
+    countedWrite(df) { observed =>
+      val schema = observed.schema
+      val (k, v, p) =
+        (schema.fieldIndex("key"), schema.fieldIndex("value"), schema.fieldIndex("partition"))
+      val h = Some(schema.fieldNames.indexOf("headers")).filter(_ >= 0)
+      observed.foreachPartition { (rows: Iterator[Row]) =>
+        val producer = newProducer()
+        try {
+          new TransactionalEpochWriter(producer, topic, transactional, timeoutS)
+            .writeEpoch(rows.map { r =>
+              val headers = h.filterNot(r.isNullAt)
+                .fold(Seq.empty[(String, Array[Byte])])(r.getMap[String, Array[Byte]](_).toSeq)
+              EpochRecord(r.getInt(p), r.getAs[Array[Byte]](k), r.getAs[Array[Byte]](v), headers)
+            })
+          ()
+        } finally producer.close()
+      }
+    }
 
   /** Runs `write` over `df` with a row count observed on the way through,
     * and returns that count — one pass, no second job. */

@@ -47,9 +47,7 @@ class StatusReporter(mgr: PipelineManager, version: String = "graft-0.1",
       s""""uptimeMs":${nowMs - startedAtMs},"timestamp":$nowMs,""" +
       s""""numPipelines":${active.size},"numStuckPipelines":${stuck.size},""" +
       s""""pipelines":$perPipeline""" +
-      writeMetrics.map(m =>
-        s""","writeMetrics":${m.pipelinesJson},"brokerWrites":${m.brokersJson}""")
-        .getOrElse("") +
+      writeMetrics.map(m => s""","writeMetrics":${m.pipelinesJson}""").getOrElse("") +
       maintenanceJson.map(j => s""","maintenance":$j""").getOrElse("") +
       "}"
   }

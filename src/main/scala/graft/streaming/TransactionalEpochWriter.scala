@@ -4,24 +4,30 @@ import java.util.concurrent.{CompletableFuture, TimeUnit, TimeoutException}
 
 import scala.collection.mutable
 
-/** Producer-shaped seam for the transactional epoch commit protocol — the
-  * same stance as [[graft.functions.PartitionMetadataCache]]'s `fetch`: the
-  * slice of the Kafka producer API the protocol needs, injectable for specs
-  * and swappable for a kafka-clients-backed implementation where that jar is
-  * on the classpath (this build ships none, so the default factory throws a
-  * clear error instead of failing deep inside a connector).
+/** Producer-shaped seam for the message-sink epoch protocol — the same
+  * stance as [[graft.functions.PartitionMetadataCache]]'s `fetch`: the slice
+  * of the Kafka and Pulsar producer APIs the protocol needs, injectable for
+  * specs and swappable for a kafka-clients- or pulsar-client-backed
+  * implementation where that jar is on the classpath (this build ships
+  * neither, so the default factories throw a clear error instead of failing
+  * deep inside a connector).
   */
 trait EpochProducer {
   /** (partition id, leader broker id or None when leaderless) for `topic` —
     * the reference's `producer.partitionsFor` (reference:
-    * writer/kafka/CommittableKafkaWriter.java:133-146). A thrown exception
-    * aborts the epoch before any send. */
+    * writer/kafka/CommittableKafkaWriter.java:133-146); a Pulsar producer
+    * lists the topic's partitions, every one with a leader. A thrown
+    * exception aborts the epoch before any send. */
   def partitionsFor(topic: String): Seq[(Int, Option[Int])]
   def beginTransaction(): Unit
   /** Async send; the returned future completes when the transport acks
     * (reference: CommittableKafkaWriter.java:215-223 callback→future). */
   def send(topic: String, partition: Int, key: Array[Byte], value: Array[Byte],
       headers: Seq[(String, Array[Byte])]): CompletableFuture[Void]
+  /** Push out sends the client still buffers; called once after the last
+    * send, before the barrier (reference: writer/pulsar/PulsarWriter.java:
+    * 190-210). */
+  def flush(): Unit = ()
   def commitTransaction(): Unit
   def abortTransaction(): Unit
   def close(): Unit = ()
@@ -42,9 +48,11 @@ case class EpochCommit(counts: Map[Int, Int]) {
 class EpochWriteException(msg: String, cause: Throwable)
     extends RuntimeException(msg, cause)
 
-/** The reference's committable/transactional epoch write protocol
-  * (reference: writer/kafka/CommittableKafkaWriter.java:130-360,
-  * writer/KafkaWriter.java:512-516,584-608), re-expressed for Spark's
+/** The reference's batch write protocol for message sinks — Kafka with or
+  * without transactions, and Pulsar (reference:
+  * writer/kafka/CommittableKafkaWriter.java:130-360,
+  * writer/KafkaWriter.java:512-516,584-608,
+  * writer/pulsar/PulsarWriter.java:190-210) — re-expressed for Spark's
   * execution model: ONE instance runs per sink TASK (inside
   * `foreachPartition`), so a transaction is atomic per task — the honest
   * Spark shape, since a Kafka transaction is a per-producer construct and a
@@ -57,7 +65,7 @@ class EpochWriteException(msg: String, cause: Throwable)
   *     partitions dropped when `skipNoLeaderPartitions`;
   *  2. `beginTransaction` when transactional;
   *  3. every record routed onto the writable list and sent async, futures
-  *     collected per partition bucket;
+  *     collected per partition bucket, then one `flush`;
   *  4. endCommit BARRIER: all buckets must ack within
   *     `writeTimeoutSeconds` (reference's executionTimer race,
   *     CommittableKafkaWriter.java:278-292) — then `commitTransaction`;
@@ -88,6 +96,7 @@ class TransactionalEpochWriter(producer: EpochProducer, topic: String,
         buckets.getOrElseUpdate(pid, mutable.ArrayBuffer.empty) +=
           producer.send(topic, pid, r.key, r.value, r.headers)
       }
+      producer.flush()
       // ---- endCommit barrier with timeout
       val all = CompletableFuture.allOf(buckets.valuesIterator.flatten.toArray: _*)
       try all.get(writeTimeoutSeconds.toLong, TimeUnit.SECONDS)
@@ -112,15 +121,21 @@ class TransactionalEpochWriter(producer: EpochProducer, topic: String,
   }
 }
 
-/** Driver-set producer factory — the injection point the sink task calls.
-  * Default throws (no kafka-clients in this build); specs and real
-  * deployments install their own. Local-mode note: the var is shared
-  * JVM-wide; a cluster deployment replaces the default with a compiled-in
-  * kafka-clients factory rather than a runtime injection. */
+/** Driver-set producer factories — the injection points the sink task
+  * calls: `factory` from Kafka bootstrap servers, `pulsarFactory` from a
+  * Pulsar service URL. The defaults throw (no client jars in this build);
+  * specs and real deployments install their own. Local-mode note: the vars
+  * are shared JVM-wide; a cluster deployment replaces the defaults with
+  * compiled-in client factories rather than a runtime injection. */
 object EpochProducers {
   @volatile var factory: String => EpochProducer = servers =>
     throw new UnsupportedOperationException(
-      s"transactional Kafka writer for $servers requires kafka-clients on " +
-        "the classpath (not shipped in this build); inject EpochProducers" +
-        ".factory or add the jar — see ROADMAP.md")
+      s"Kafka writer for $servers requires kafka-clients on the classpath " +
+        "(not shipped in this build); inject EpochProducers.factory or add " +
+        "the jar — see ROADMAP.md")
+  @volatile var pulsarFactory: String => EpochProducer = serviceUrl =>
+    throw new UnsupportedOperationException(
+      s"Pulsar writer for $serviceUrl requires pulsar-client on the classpath " +
+        "(not shipped in this build); inject EpochProducers.pulsarFactory or " +
+        "add the jar — see ROADMAP.md")
 }

@@ -7,9 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 /** Write-path metrics parity with the reference's per-task accounting
   * (reference: writer/KafkaWritingTask.java:71-141 — WRITER_BATCH_SIZE per
   * topic, bytesWritten summed from record metadata, one end-to-end write
-  * latency per task, BROKER_WRITE_SUCCESS / BROKER_WRITE_FAILURE /
-  * BROKER_WRITE_LATENCY keyed by the partition's LEADER NODE, "n/a" when
-  * leader resolution failed — KafkaWritingTask.java:55-63).
+  * latency per task).
   *
   * Spark-first shape: counters live in ONE driver-side registry —
   * micro-batch writes are driver-coordinated (`foreachBatch` runs on the
@@ -24,72 +22,39 @@ class WriteMetricsRegistry {
   case class PipelineWrites(batches: Long, messages: Long, bytes: Long,
       failures: Long, lastLatencyMs: Long, maxLatencyMs: Long)
 
-  /** Per-(pipeline, broker) totals (the BROKER_* granular family). */
-  case class BrokerWrites(successes: Long, failures: Long,
-      latencySumMs: Long, latencyMaxMs: Long)
-
   private val pipelines = TrieMap.empty[String, PipelineWrites]
-  private val brokers = TrieMap.empty[(String, String), BrokerWrites]
-
-  // lock-free atomic read-modify-write on a TrieMap key: putIfAbsent wins
-  // the empty slot or replace(k, prev, next) CASes an occupied one; retry
-  // on contention so concurrent listener buses never lose increments
-  @annotation.tailrec
-  private def update[K, V](map: TrieMap[K, V], key: K, zero: V)(f: V => V): Unit =
-    map.putIfAbsent(key, f(zero)) match {
-      case None => ()
-      case Some(prev) =>
-        if (!map.replace(key, prev, f(prev))) update(map, key, zero)(f)
-    }
 
   /** One write batch finished (reference: one KafkaWritingTaskResult). */
   def recordBatch(pipeline: String, messages: Long, bytes: Long,
-      latencyMs: Long, success: Boolean): Unit =
-    update(pipelines, pipeline, PipelineWrites(0, 0, 0, 0, 0, 0)) { prev =>
-      PipelineWrites(
-        prev.batches + 1,
-        prev.messages + (if (success) messages else 0),
-        prev.bytes + (if (success) bytes else 0),
-        prev.failures + (if (success) 0 else 1),
-        latencyMs,
-        math.max(prev.maxLatencyMs, latencyMs))
-    }
-
-  /** Granular per-broker write outcome. `leader = None` records under
-    * "n/a" — the reference's stance when leader metadata is unavailable
-    * (KafkaWritingTask.java:62: `leaderNode = "n/a"`), so broker-keyed
-    * counters never silently drop writes. */
-  def recordBrokerWrite(pipeline: String, leader: Option[Int],
       latencyMs: Long, success: Boolean): Unit = {
-    val key = (pipeline, leader.map(_.toString).getOrElse("n/a"))
-    update(brokers, key, BrokerWrites(0, 0, 0, 0)) { prev =>
-      BrokerWrites(
-        prev.successes + (if (success) 1 else 0),
-        prev.failures + (if (success) 0 else 1),
-        prev.latencySumMs + latencyMs,
-        math.max(prev.latencyMaxMs, latencyMs))
-    }
+    def next(prev: PipelineWrites) = PipelineWrites(
+      prev.batches + 1,
+      prev.messages + (if (success) messages else 0),
+      prev.bytes + (if (success) bytes else 0),
+      prev.failures + (if (success) 0 else 1),
+      latencyMs,
+      math.max(prev.maxLatencyMs, latencyMs))
+    // lock-free atomic read-modify-write on the pipeline's key: putIfAbsent
+    // wins the empty slot or replace(k, prev, next) CASes an occupied one;
+    // retry on contention so concurrent listener buses never lose increments
+    @annotation.tailrec
+    def update(): Unit =
+      pipelines.putIfAbsent(pipeline, next(PipelineWrites(0, 0, 0, 0, 0, 0))) match {
+        case None => ()
+        case Some(prev) => if (!pipelines.replace(pipeline, prev, next(prev))) update()
+      }
+    update()
   }
 
   def pipelineSnapshot: Map[String, PipelineWrites] = pipelines.toMap
-  def brokerSnapshot: Map[(String, String), BrokerWrites] = brokers.toMap
 
-  /** JSON fragments for [[StatusReporter]]. */
+  /** JSON fragment for [[StatusReporter]]. */
   private[streaming] def pipelinesJson: String =
     pipelines.toSeq.sortBy(_._1).map { case (name, w) =>
       s""""${StatusReporter.esc(name)}":{"batches":${w.batches},""" +
         s""""messages":${w.messages},"bytes":${w.bytes},""" +
         s""""failures":${w.failures},"lastLatencyMs":${w.lastLatencyMs},""" +
         s""""maxLatencyMs":${w.maxLatencyMs}}"""
-    }.mkString("{", ",", "}")
-
-  private[streaming] def brokersJson: String =
-    brokers.toSeq.sortBy(_._1).map { case ((name, broker), w) =>
-      val avg = if (w.successes + w.failures == 0) 0L
-        else w.latencySumMs / (w.successes + w.failures)
-      s""""${StatusReporter.esc(s"$name@$broker")}":{"successes":${w.successes},""" +
-        s""""failures":${w.failures},"avgLatencyMs":$avg,""" +
-        s""""maxLatencyMs":${w.latencyMaxMs}}"""
     }.mkString("{", ",", "}")
 }
 

@@ -335,43 +335,7 @@ class LogPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(values(spark.read.parquet(outDir2).collect()) == Set("payload=in1", "payload=in2"))
   }
 
-  test("kafka sink projection carries _mid/_ots headers in the Kafka writer encoding") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    import graft.operators.Transforms
-    val logDir = tempDir("graft-kh-logs")
-    Files.writeString(logDir.resolve("k.log"), "data:a\ndata:b\n")
-    val cfg = cfgFor("kafka-headers", logDir, tempDir("graft-kh-o"), tempDir("graft-kh-c"))
-    val df = LogPipeline.runBatch(spark, cfg)
-      .withColumn("topic", lit("t"))
-      .withColumn("headers", map_concat(col("headers"),
-        map(lit("_mid"), Transforms.midHeader(lit(7L), lit(42L)),
-            lit("_ots"), Transforms.otsHeader(lit(123456789L)))))
-    val out = LogPipeline.kafkaSinkProjection(df)
-    // exact Kafka writer contract: key/value/partition/topic +
-    // headers array<struct<key:string,value:binary>>
-    assert(out.columns.toSeq == Seq("key", "value", "partition", "topic", "headers"))
-    val hType = out.schema("headers").dataType
-    assert(hType == ArrayType(StructType(Seq(
-      StructField("key", StringType, nullable = false),
-      StructField("value", BinaryType))), containsNull = false), s"got $hType")
-    val rows = out.collect()
-    assert(rows.length == 2)
-    rows.foreach { r =>
-      val hs = r.getSeq[org.apache.spark.sql.Row](4)
-        .map(h => h.getString(0) -> h.getAs[Array[Byte]](1)).toMap
-      assert(new String(hs("az")) == "test-az")
-      assert(hs("_mid").length == 16 && hs("_ots").length == 8)
-      assert(BigInt(1, hs("_ots")).toLong == 123456789L)
-      assert(BigInt(1, hs("_mid").take(8)).toLong == 7L)
-      assert(BigInt(1, hs("_mid").drop(8)).toLong == 42L)
-    }
-    // a headerless frame degrades to the 4-column contract
-    assert(LogPipeline.kafkaSinkProjection(df.drop("headers")).columns.toSeq ==
-      Seq("key", "value", "partition", "topic"))
-  }
-
-  test("pulsar writer: config validation, random default router, properties projection") {
+  test("pulsar writer: config validation, random default router") {
     // reference: writer/pulsar/PulsarWriter.java validateConfig +
     // DefaultPartitioner (random) + PulsarMessageRouter key routing
     intercept[IllegalArgumentException] {
@@ -395,18 +359,6 @@ class LogPipelineSpec extends AnyFunSuite with SparkTestBase {
       "logName=pl2\nwriter.type=pulsar\nwriter.pulsar.partitionerClass=com.x.Crc32\n" +
         "writer.pulsar.numPartitions=16\n")
     assert(cfg2.partitioner == PartitionerSpec.Crc32Key(16))
-
-    // projection: headers become string properties; partition is the route
-    val logDir = tempDir("graft-pl-logs")
-    Files.writeString(logDir.resolve("p.log"), "data:a\n")
-    val base = cfgFor("pl-proj", logDir, tempDir("graft-pl-o"), tempDir("graft-pl-c"))
-    val df = LogPipeline.runBatch(spark, base)
-      .withColumn("topic", org.apache.spark.sql.functions.lit("pt"))
-    val out = LogPipeline.pulsarSinkProjection(df)
-    assert(out.columns.toSeq == Seq("key", "value", "partition", "topic", "properties"))
-    val r = out.collect().head
-    assert(r.getAs[Map[String, String]]("properties")("az") == "test-az")
-    assert(r.getAs[Int]("partition") >= 0 && r.getAs[Int]("partition") < 8)
   }
 
   test("PipelineConfig.fromProperties parses singer-style properties") {

@@ -173,12 +173,15 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
   import java.util.concurrent.CompletableFuture
 
   /** Scripted producer: `failPartitions` fail their sends async;
-    * `hangPartitions` never complete (exercises the endCommit timeout). */
+    * `hangPartitions` never complete (exercises the endCommit timeout).
+    * `sentAtFlush` is the number of sends made when `flush` was called. */
   class FakeProducer(partitions: Seq[(Int, Option[Int])],
       failPartitions: Set[Int] = Set.empty,
       hangPartitions: Set[Int] = Set.empty) extends EpochProducer {
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
     val sent = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+    val sentHeaders = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Array[Byte])]]
+    var sentAtFlush = -1
     override def partitionsFor(topic: String): Seq[(Int, Option[Int])] = {
       calls += "partitionsFor"; partitions
     }
@@ -186,6 +189,7 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     override def send(topic: String, partition: Int, key: Array[Byte],
         value: Array[Byte], headers: Seq[(String, Array[Byte])]): CompletableFuture[Void] = {
       sent += ((partition, new String(value)))
+      sentHeaders += headers
       val f = new CompletableFuture[Void]()
       if (hangPartitions.contains(partition)) () // never completes
       else if (failPartitions.contains(partition))
@@ -193,6 +197,7 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
       else f.complete(null)
       f
     }
+    override def flush(): Unit = { calls += "flush"; sentAtFlush = sent.size }
     override def commitTransaction(): Unit = calls += "commit"
     override def abortTransaction(): Unit = calls += "abort"
   }
@@ -207,7 +212,9 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     val commit = w.writeEpoch(records(9))
     assert(commit.total == 9)
     assert(commit.counts == Map(0 -> 3, 1 -> 3, 2 -> 3)) // round-robin routing
-    assert(p.calls == Seq("partitionsFor", "begin", "commit"))
+    assert(p.calls == Seq("partitionsFor", "begin", "flush", "commit"))
+    // reference ordering (PulsarWriter.java:190-210): every send precedes the flush
+    assert(p.sentAtFlush == 9)
   }
 
   test("TransactionalEpochWriter aborts when ANY bucket fails; commit never called") {
@@ -215,7 +222,7 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     val w = new TransactionalEpochWriter(p, "t", transactional = true)
     val e = intercept[EpochWriteException] { w.writeEpoch(records(6)) }
     assert(e.getMessage.contains("failed"))
-    assert(p.calls == Seq("partitionsFor", "begin", "abort"))
+    assert(p.calls == Seq("partitionsFor", "begin", "flush", "abort"))
     // the healthy bucket's sends DID go out — the abort is what voids them
     assert(p.sent.count(_._1 == 0) == 3)
   }
@@ -226,7 +233,7 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
       writeTimeoutSeconds = 1)
     val e = intercept[EpochWriteException] { w.writeEpoch(records(4)) }
     assert(e.getMessage.contains("timed out"))
-    assert(p.calls == Seq("partitionsFor", "begin", "abort"))
+    assert(p.calls == Seq("partitionsFor", "begin", "flush", "abort"))
   }
 
   test("TransactionalEpochWriter skips leaderless partitions when routing") {
@@ -240,62 +247,110 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
   test("TransactionalEpochWriter non-transactional mode never begins/commits/aborts") {
     val ok = new FakeProducer(Seq(0 -> Some(100)))
     new TransactionalEpochWriter(ok, "t", transactional = false).writeEpoch(records(3))
-    assert(ok.calls == Seq("partitionsFor"))
+    assert(ok.calls == Seq("partitionsFor", "flush"))
     val bad = new FakeProducer(Seq(0 -> Some(100)), failPartitions = Set(0))
     intercept[EpochWriteException] {
       new TransactionalEpochWriter(bad, "t", transactional = false).writeEpoch(records(3))
     }
-    assert(bad.calls == Seq("partitionsFor"), "no abort without a transaction")
+    assert(bad.calls == Seq("partitionsFor", "flush"), "no abort without a transaction")
   }
 
-  /** Scripted Pulsar producer: records call order; `failAll` completes
-    * sends exceptionally. */
-  class FakePulsarProducer(failAll: Boolean = false) extends PulsarEpochProducer {
-    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sent = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-    override def sendAsync(topic: String, partition: Int, key: Array[Byte],
-        value: Array[Byte], properties: Map[String, String]): CompletableFuture[Void] = {
-      calls += "send"; sent += ((partition, new String(value)))
-      val f = new CompletableFuture[Void]()
-      if (failAll) f.completeExceptionally(new RuntimeException("broker down"))
-      else f.complete(null)
-      f
-    }
-    override def flush(): Unit = calls += "flush"
-  }
+  // The Pulsar batch write protocol (reference: PulsarWriter.java:190-210)
+  // is the writer as the Pulsar arm of writeBatch builds it: no transaction.
+  private def pulsarWriter(p: FakeProducer, timeoutS: Int = 60) =
+    new TransactionalEpochWriter(p, "t", transactional = false, writeTimeoutSeconds = timeoutS)
 
   test("PulsarEpochWriter sends all, flushes, then awaits the batch barrier") {
-    val p = new FakePulsarProducer()
-    val n = new PulsarEpochWriter(p, "t").writeEpoch(
-      (0 until 5).iterator.map(i => PulsarRecord(i, Array.emptyByteArray, s"m$i".getBytes)))
-    assert(n == 5)
-    // reference ordering: every sendAsync precedes the flush
-    assert(p.calls == Seq.fill(5)("send") :+ "flush")
+    val p = new FakeProducer(Seq(0 -> Some(0), 1 -> Some(0)))
+    assert(pulsarWriter(p).writeEpoch(records(5)).total == 5)
+    // reference ordering: every send precedes the flush
+    assert(p.calls == Seq("partitionsFor", "flush"))
+    assert(p.sentAtFlush == 5)
+    // the barrier comes after the flush: a send that never completes holds
+    // the epoch until the timeout, with every send already out
+    val hung = new FakeProducer(Seq(0 -> Some(0), 1 -> Some(0)), hangPartitions = Set(1))
+    val e = intercept[EpochWriteException] { pulsarWriter(hung, timeoutS = 1).writeEpoch(records(4)) }
+    assert(e.getMessage.contains("timed out"))
+    assert(hung.calls == Seq("partitionsFor", "flush"))
+    assert(hung.sentAtFlush == 4)
   }
 
   test("PulsarEpochWriter fails the whole epoch when any send fails") {
-    val p = new FakePulsarProducer(failAll = true)
-    intercept[EpochWriteException] {
-      new PulsarEpochWriter(p, "t").writeEpoch(
-        Iterator(PulsarRecord(0, Array.emptyByteArray, "m".getBytes)))
+    // all sends fail, or one partition of two
+    Seq(Set(0, 1), Set(1)).foreach { failing =>
+      val p = new FakeProducer(Seq(0 -> Some(0), 1 -> Some(0)), failPartitions = failing)
+      val e = intercept[EpochWriteException] { pulsarWriter(p).writeEpoch(records(4)) }
+      assert(e.getMessage.contains("failed"))
+      assert(p.calls == Seq("partitionsFor", "flush"))
+      assert(p.sent.size == 4)
     }
   }
 
   test("WriterSpec.Pulsar drives the per-task protocol through writeBatch") {
     import graft.model._
-    val made = new java.util.concurrent.CopyOnWriteArrayList[FakePulsarProducer]()
-    val saved = PulsarProducers.factory
-    PulsarProducers.factory = _ => { val p = new FakePulsarProducer(); made.add(p); p }
+    val made = new java.util.concurrent.CopyOnWriteArrayList[FakeProducer]()
+    val saved = EpochProducers.pulsarFactory
+    EpochProducers.pulsarFactory = _ => {
+      val p = new FakeProducer(Seq(0 -> Some(0), 1 -> Some(0), 2 -> Some(0)))
+      made.add(p); p
+    }
     try {
       val df = (0 until 12).map(i => (s"k$i".getBytes, s"v$i".getBytes, i, "t"))
         .toDF("key", "value", "partition", "topic").repartition(3)
       val cfg = PipelineConfig(name = "pl", logDir = "/tmp",
         writer = WriterSpec.Pulsar("pulsar://fake:6650", "t"))
       assert(LogPipeline.writeBatch(df, cfg) == 12)
-      val all = made.toArray(Array.empty[FakePulsarProducer])
-      assert(all.map(_.sent.size).sum == 12)
-      all.filter(_.sent.nonEmpty).foreach(p => assert(p.calls.last == "flush"))
-    } finally PulsarProducers.factory = saved
+      val all = made.toArray(Array.empty[FakeProducer])
+      assert(all.flatMap(_.sent).sortBy(_._2).toSeq == (0 until 12).map(i => (i % 3, s"v$i")).sortBy(_._2),
+        "the partition column routes mod the topic's partition count")
+      // no transaction; every send precedes the flush
+      all.foreach { p =>
+        assert(p.calls == Seq("partitionsFor", "flush"))
+        assert(p.sentAtFlush == p.sent.size)
+      }
+    } finally EpochProducers.pulsarFactory = saved
+  }
+
+  test("WriterSpec.Kafka(transactional = false) sends every record once with its headers through writeBatch") {
+    import graft.model._
+    import graft.operators.Transforms
+    import org.apache.spark.sql.functions._
+    val logDir = Files.createTempDirectory("graft-kafka-plain")
+    val payloads = (1 to 10).map(i => s"m$i")
+    Files.writeString(logDir.resolve("k.log"), payloads.map(_ + "\n").mkString)
+    val made = new java.util.concurrent.CopyOnWriteArrayList[FakeProducer]()
+    val saved = EpochProducers.factory
+    // partition 1 has no leader: routing skips it
+    EpochProducers.factory = _ => {
+      val p = new FakeProducer(Seq(0 -> Some(100), 1 -> None, 2 -> Some(102)))
+      made.add(p); p
+    }
+    try {
+      val cfg = PipelineConfig(name = "kafka-plain", logDir = logDir.toString,
+        partitioner = PartitionerSpec.Crc32Key(8),
+        writer = WriterSpec.Kafka("fake:9092", "t"),
+        injectHeaders = Map("az" -> "test-az"))
+      // the frame `start` hands writeBatch: the envelope plus a topic column
+      val df = LogPipeline.runBatch(spark, cfg).withColumn("topic", lit("t"))
+        .withColumn("headers", map_concat(col("headers"),
+          map(lit("_mid"), Transforms.midHeader(lit(7L), lit(42L)),
+              lit("_ots"), Transforms.otsHeader(lit(123456789L)))))
+        .repartition(3)
+      assert(LogPipeline.writeBatch(df, cfg) == 10)
+      val all = made.toArray(Array.empty[FakeProducer])
+      assert(all.flatMap(_.sent.map(_._2)).sorted.toSeq == payloads.sorted)
+      assert(all.flatMap(_.sent.map(_._1)).toSet.subsetOf(Set(0, 2)))
+      all.foreach(p => assert(p.calls == Seq("partitionsFor", "flush")))
+      val mid = java.nio.ByteBuffer.allocate(16).putLong(7L).putLong(42L).array()
+      val ots = java.nio.ByteBuffer.allocate(8).putLong(123456789L).array()
+      all.flatMap(_.sentHeaders).foreach { hs =>
+        val m = hs.toMap
+        assert(m.keySet == Set("az", "_mid", "_ots"))
+        assert(m("az").sameElements("test-az".getBytes("UTF-8")))
+        assert(m("_mid").sameElements(mid))
+        assert(m("_ots").sameElements(ots))
+      }
+    } finally EpochProducers.factory = saved
   }
 
   test("WriterSpec.Kafka(transactional) drives the per-task protocol through writeBatch") {
@@ -317,7 +372,7 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
       assert(all.nonEmpty)
       // every task's producer ran the full begin→commit protocol
       all.filter(_.sent.nonEmpty).foreach(p =>
-        assert(p.calls == Seq("partitionsFor", "begin", "commit")))
+        assert(p.calls == Seq("partitionsFor", "begin", "flush", "commit")))
       assert(all.map(_.sent.size).sum == 20)
     } finally EpochProducers.factory = saved
   }

@@ -7,13 +7,11 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.functions.{BrokerAdmin, BrokerNode, TopicPartitionMeta}
 import graft.streaming.EventAnalytics.Ev
 
 /** Write-latency/throughput metrics parity with the reference's
   * per-task accounting (writer/KafkaWritingTask.java:71-141): batch size,
-  * bytes, end-to-end latency, failure counting, and the BROKER_WRITE_*
-  * granular family keyed by leader node with the "n/a" fallback. */
+  * bytes, end-to-end latency, failure counting. */
 class WriteMetricsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
@@ -30,29 +28,6 @@ class WriteMetricsSpec extends AnyFunSuite with SparkTestBase {
     assert(w.bytes == 12000)
     assert(w.failures == 1)
     assert(w.lastLatencyMs == 4 && w.maxLatencyMs == 30)
-  }
-
-  test("per-broker counters key by leader node, n/a when leader unknown") {
-    // the reference resolves partition -> leader via admin metadata and
-    // falls back to "n/a" (KafkaWritingTask.java:55-63); script the same
-    // resolution through the BrokerAdmin seam
-    val admin = new BrokerAdmin {
-      override def describeCluster() =
-        Seq(BrokerNode(11, "rack-a"), BrokerNode(12, "rack-b"))
-      override def describeTopic(topic: String) = Seq(
-        TopicPartitionMeta(0, Some(11)), TopicPartitionMeta(1, Some(12)),
-        TopicPartitionMeta(2, None)) // leaderless
-    }
-    val leaders = admin.describeTopic("t").map(m => m.partition -> m.leaderNodeId).toMap
-    val r = new WriteMetricsRegistry
-    r.recordBrokerWrite("p1", leaders(0), latencyMs = 10, success = true)
-    r.recordBrokerWrite("p1", leaders(0), latencyMs = 20, success = true)
-    r.recordBrokerWrite("p1", leaders(1), latencyMs = 40, success = false)
-    r.recordBrokerWrite("p1", leaders(2), latencyMs = 5, success = true)
-    val b = r.brokerSnapshot
-    assert(b(("p1", "11")).successes == 2 && b(("p1", "11")).latencyMaxMs == 20)
-    assert(b(("p1", "12")).failures == 1)
-    assert(b(("p1", "n/a")).successes == 1) // leaderless writes are never dropped
   }
 
   test("listener feeds per-batch trigger latency into the registry; status JSON carries both families") {
@@ -75,13 +50,13 @@ class WriteMetricsSpec extends AnyFunSuite with SparkTestBase {
       assert(w.batches >= 1 && w.failures == 0)
       assert(w.messages >= 2) // both rows counted through progress
 
-      registry.recordBrokerWrite("wm_pipe", Some(7), 15, success = true)
       val mgr = new PipelineManager(spark)
       mgr.adopt("wm_pipe", q)
       val json = new StatusReporter(mgr, writeMetrics = Some(registry)).statusJson()
+      // the per-query progress family and the write-metrics family
+      assert(json.contains("\"pipelines\":{\"wm_pipe\":{\"batchId\":"), json)
       assert(json.contains("\"writeMetrics\":{"), json)
       assert(json.contains("\"wm_pipe\":{\"batches\":"), json)
-      assert(json.contains("\"brokerWrites\":{\"wm_pipe@7\":{\"successes\":1"), json)
       // no-registry reporters keep the old shape
       assert(!new StatusReporter(mgr).statusJson().contains("writeMetrics"))
     } finally {
@@ -117,7 +92,7 @@ class WriteMetricsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("concurrent recordBatch/recordBrokerWrite lose no increments") {
+  test("concurrent recordBatch calls lose no increments") {
     // the registry's read-modify-write is a CAS retry loop; interleaved
     // getOrElse-then-put used to drop counter increments under two
     // listener buses (round-10 review finding)
@@ -130,7 +105,6 @@ class WriteMetricsSpec extends AnyFunSuite with SparkTestBase {
       pool.execute { () =>
         (0 until perThread).foreach { i =>
           r.recordBatch("p", messages = 1, bytes = 2, latencyMs = i, success = true)
-          r.recordBrokerWrite("p", Some(7), latencyMs = 1, success = true)
         }
         done.countDown()
       }
@@ -141,8 +115,5 @@ class WriteMetricsSpec extends AnyFunSuite with SparkTestBase {
     assert(w.batches == threads.toLong * perThread, s"lost batch increments: $w")
     assert(w.messages == threads.toLong * perThread)
     assert(w.bytes == 2L * threads * perThread)
-    val b = r.brokerSnapshot(("p", "7"))
-    assert(b.successes == threads.toLong * perThread, s"lost broker increments: $b")
-    assert(b.latencySumMs == threads.toLong * perThread)
   }
 }

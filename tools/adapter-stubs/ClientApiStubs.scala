@@ -2,8 +2,9 @@
 //
 // The zero-egress build image ships no kafka-clients / pulsar-client jar,
 // so `tools/adapters/KafkaClientsAdapters.scala` (the live-client half of
-// the engine's injectable sink/metadata seams) cannot be compiled on the
-// default path and would bit-rot silently. These stubs reproduce ONLY the
+// the engine's two injectable seams: the `EpochProducer` sink seam shared
+// by Kafka and Pulsar, and the partition-metadata fetch) cannot be
+// compiled on the default path and would bit-rot silently. These stubs reproduce ONLY the
 // public API signatures that file uses — method names, parameter and
 // return types, from the published Apache Kafka and Apache Pulsar client
 // Javadoc — so `sbt adapterStubCompile` can typecheck the adapters without
@@ -130,6 +131,7 @@ package org.apache.pulsar.client.api {
 
   trait PulsarClient {
     def newProducer(): ProducerBuilder[Array[Byte]]
+    def getPartitionsForTopic(topic: String): CompletableFuture[java.util.List[String]]
     def close(): Unit
   }
 

@@ -3,9 +3,9 @@
 // This file is the thin live-client half of the two injectable seams the
 // engine ships spec-tested against scripted fakes:
 //
-//   graft.streaming.EpochProducers.factory        (transactional epoch writer)
+//   graft.streaming.EpochProducer                 (Kafka and Pulsar epoch writer,
+//     from EpochProducers.factory / EpochProducers.pulsarFactory)
 //   graft.functions.PartitionMetadataCache fetch  (locality-aware partitioner)
-//   graft.streaming.PulsarProducers.factory       (Pulsar batch writer)
 //
 // The build container ships no kafka-clients / pulsar-client jar (zero
 // egress, fixed unmanaged classpath), so this directory is NOT in
@@ -17,12 +17,12 @@
 //        Compile / unmanagedSourceDirectories += baseDirectory.value / "tools" / "adapters"
 //   3. at driver startup:
 //        EpochProducers.factory = s => new KafkaClientsEpochProducer(s, txnId)
-//        PulsarProducers.factory = url => new PulsarClientsEpochProducer(url)
+//        EpochProducers.pulsarFactory = url => new PulsarClientsEpochProducer(url)
 //      and build locality metadata caches with
 //        new PartitionMetadataCache(KafkaAdminMetadata.fetcher(servers, topic))
 //
-// Everything protocol-level (begin/send/barrier/commit-or-abort, leaderless
-// skip, refresh/stale-on-failure) already lives, tested, behind the seams —
+// Everything protocol-level (begin/send/flush/barrier/commit-or-abort,
+// leaderless skip, partition routing, refresh/stale-on-failure) already lives, tested, behind the seams —
 // these classes only translate the seam's narrow API onto the client jars.
 //
 // Bit-rot guard: `sbt adapterStubCompile` typechecks this file against
@@ -41,7 +41,7 @@ import org.apache.kafka.clients.producer.{KafkaProducer, ProducerRecord, RecordM
 import org.apache.kafka.common.header.internals.RecordHeader
 
 import graft.functions.PartitionInfo
-import graft.streaming.{EpochProducer, PulsarEpochProducer}
+import graft.streaming.EpochProducer
 
 /** [[graft.streaming.EpochProducer]] over a real KafkaProducer.
   *
@@ -134,35 +134,56 @@ final class KafkaBrokerAdmin(bootstrapServers: String)
   override def close(): Unit = admin.close()
 }
 
-/** [[graft.streaming.PulsarEpochProducer]] over a real Pulsar client.
-  * Partitioned-topic routing uses the engine's partition column verbatim
-  * (reference: writer/pulsar/PulsarMessageRouter.java:40-51) by addressing
-  * the internal `-partition-N` topic, Pulsar's stable per-partition name. */
-final class PulsarClientsEpochProducer(serviceUrl: String)
-    extends PulsarEpochProducer {
+/** [[graft.streaming.EpochProducer]] over a real Pulsar client.
+  * `partitionsFor` lists the topic's partitions (Pulsar assigns their
+  * brokers itself, so every one is writable); the epoch writer routes the
+  * engine's partition column onto them `mod n`, the reference's
+  * writer/pulsar/PulsarMessageRouter.java:40-51. A send addresses the
+  * partition's own topic name as the client lists it. Headers travel as
+  * message properties, decoded as UTF-8. Pulsar producers have no
+  * transactions: the engine runs this producer with `transactional = false`. */
+final class PulsarClientsEpochProducer(serviceUrl: String) extends EpochProducer {
 
   private val client = org.apache.pulsar.client.api.PulsarClient.builder()
     .serviceUrl(serviceUrl).build()
+  private val partitionNames =
+    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[String]]()
   private val producers =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.pulsar.client.api.Producer[Array[Byte]]]()
 
-  private def producerFor(topic: String, partition: Int) = {
-    val name = s"$topic-partition-$partition"
-    producers.computeIfAbsent(name, n =>
+  private def producerFor(topic: String, partition: Int) =
+    producers.computeIfAbsent(partitionNames.get(topic)(partition), n =>
       client.newProducer().topic(n)
         .enableBatching(true) // the reference's batch path (PulsarWriter.java:68)
         .blockIfQueueFull(true)
         .create())
+
+  override def partitionsFor(topic: String): Seq[(Int, Option[Int])] = {
+    val names = client.getPartitionsForTopic(topic).get().asScala.toIndexedSeq
+    partitionNames.put(topic, names)
+    names.indices.map(p => (p, Some(0)))
   }
 
-  override def sendAsync(topic: String, partition: Int, key: Array[Byte],
-      value: Array[Byte], properties: Map[String, String]): CompletableFuture[Void] =
+  override def beginTransaction(): Unit = notTransactional()
+
+  override def send(topic: String, partition: Int, key: Array[Byte],
+      value: Array[Byte], headers: Seq[(String, Array[Byte])]): CompletableFuture[Void] = {
+    val properties = headers.map { case (k, v) =>
+      k -> Option(v).map(new String(_, java.nio.charset.StandardCharsets.UTF_8)).orNull
+    }.toMap
     producerFor(topic, partition).newMessage()
       .keyBytes(key).value(value).properties(properties.asJava)
       .sendAsync().thenApply(_ => null: Void).toCompletableFuture
+  }
 
   override def flush(): Unit =
     producers.values().asScala.foreach(_.flush())
+
+  override def commitTransaction(): Unit = notTransactional()
+  override def abortTransaction(): Unit = notTransactional()
+
+  private def notTransactional(): Nothing =
+    throw new UnsupportedOperationException("Pulsar producers have no transactions")
 
   override def close(): Unit = {
     producers.values().asScala.foreach(_.close())
